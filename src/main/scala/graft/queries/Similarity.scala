@@ -47,7 +47,7 @@ object Similarity {
     * run on the full frame. Search-side losslessness is untouched by
     * construction: the exhaustive-config oracle rows are fit-blind
     * (q_ann_ivf_trained_exh runs at fitFraction = 0.5 to pin exactly
-    * that), and sample-fit recall is gated in AnnRecallSpec + the
+    * that), and sample-fit recall is gated in SampleFitSpec + the
     * ScaleProbe sample-fit census. When the draw leaves fewer rows
     * than the fit needs (`minRows` — the largest k it trains), the
     * guard fails loudly: an underfed ml.KMeans silently returns
@@ -539,21 +539,23 @@ object Similarity {
       GROUP BY 1
       ORDER BY 1"""))
 
-  /** E3 variant with TRAINED coarse centroids: KMeans (seeded — the fit
-    * is deterministic for a fixed seed and input partitioning) replaces
-    * the first-10-vectors centroids, so cells actually tile the data
-    * distribution and the same probe count reaches higher recall. The
-    * search-side plan is identical to [[annIvf]] — centroids land in the
-    * plan as literals (they are driver-side model state, metadata-scale
-    * by nature), vectors join their cell on an equi-key. Library-only:
-    * the iterative fit is not SQL-expressible, so this ships behind a
-    * recall spec instead of a DuckDB oracle while [[annIvf]] remains the
-    * oracle-checked row.
+  /** E3 variant with TRAINED coarse centroids: a Lloyd fit
+    * ([[KMeansLloyd.fitCentroids]], initialised from the `cells`
+    * smallest vec_ids — deterministic and partitioning-invariant)
+    * replaces the first-10-vectors centroids, so cells actually tile
+    * the data distribution and the same probe count reaches higher
+    * recall. The search-side plan is identical to [[annIvf]] —
+    * centroids land in the plan as literals (they are driver-side model
+    * state, metadata-scale by nature), vectors join their cell on an
+    * equi-key. Library-only: the iterative fit is not SQL-expressible,
+    * so this ships behind a recall spec instead of a DuckDB oracle while
+    * [[annIvf]] remains the oracle-checked row.
     *
-    * At 100 TB: train on a sample — `fitFraction` < 1 fits the KMeans
-    * on the seeded deterministic vec_id draw ([[fitFrame]]) while
-    * assignment still covers every vector — and `cells` should grow
-    * toward √N so candidate sets stay ~N/√N per probe. */
+    * At 100 TB: train on a sample — `fitFraction` < 1 fits the
+    * centroids on the seeded deterministic vec_id draw ([[fitFrame]])
+    * while assignment still covers every vector — and `cells` should
+    * grow toward √N so candidate sets stay ~N/√N per probe. `seed`
+    * seeds only that draw; the fit itself takes no seed. */
   def annIvfTrained(
       embeddings: DataFrame,
       cells: Int = 10,
@@ -610,14 +612,15 @@ object Similarity {
   /** Trained-centroid ORACLE coverage — the E7 losslessness pattern
     * applied to [[annIvfTrained]]: with `probes = cells` every query
     * scores EVERY vector exactly once (each vector sits in exactly one
-    * KMeans cell, and probing all cells erases the partitioning), so
+    * trained cell, and probing all cells erases the partitioning), so
     * the output is provably ≡ brute-force top-k whatever the fit
-    * produced — which makes the full trained path (ml.KMeans fit →
-    * transform assignment → broadcast-centroid probe → cell equi-join
-    * → exact rescore → ranking) oracle-checkable against the SQL brute
-    * force even though the iterative fit itself is not
+    * produced — which makes the full trained path (Lloyd fit on the
+    * draw → argmin assignment → broadcast-centroid probe → cell
+    * equi-join → exact rescore → ranking) oracle-checkable against the
+    * SQL brute force even though the iterative fit itself is not
     * SQL-expressible. Probe-limited recall (the production setting)
-    * stays spec-gated: AnnRecallSpec + the 1M-vector ScaleProbe.
+    * stays spec-gated: AnnRecallSpec (full fit), SampleFitSpec
+    * (sample fit) + the 1M-vector ScaleProbe.
     *
     * Runs at `fitFraction = 0.5`, so the driver gate ALSO pins the
     * sample-fit path end to end: centroids trained on the half-corpus

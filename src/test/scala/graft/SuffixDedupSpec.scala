@@ -93,18 +93,39 @@ class SuffixDedupSpec extends SparkSpec {
   }
 
   /** Brute-force maximal duplicated length: for each (doc, p), the
-    * longest L with another occurrence of text[p, p+L-1] anywhere. */
+    * longest L with another occurrence of text[p, p+L-1] anywhere.
+    * Every ordered pair of positions is compared char by char in an
+    * index loop: the corpus head has ~88M position pairs, too many to
+    * build a collection per pair. */
   private def bruteMaxima(docs: Seq[(Long, String)], k: Int): Map[(Long, Long), Long] = {
     val all = for {
       (id, t) <- docs; p <- 1 to t.length
-    } yield (id, p.toLong, t.substring(p - 1))
+    } yield (id, p, t)
+    val ids = all.map(_._1).toArray
+    val ps = all.map(_._2).toArray
+    val texts = all.map(_._3).toArray
+    // length of the common prefix of a[i..] and b[j..]
+    def lcp(a: String, i0: Int, b: String, j0: Int): Int = {
+      var i = i0; var j = j0
+      while (i < a.length && j < b.length && a.charAt(i) == b.charAt(j)) {
+        i += 1; j += 1
+      }
+      i - i0
+    }
     (for {
-      (id, p, sfx) <- all
-      ms = all.collect { case (id2, p2, sfx2) if (id2, p2) != ((id, p)) =>
-        sfx.zip(sfx2).takeWhile { case (a, b) => a == b }.size.toLong }
-      m = if (ms.isEmpty) 0L else ms.max
+      x <- ids.indices
+      m = {
+        var best = 0
+        var y = 0
+        while (y < ids.length) {
+          if (ids(y) != ids(x) || ps(y) != ps(x))
+            best = math.max(best, lcp(texts(x), ps(x) - 1, texts(y), ps(y) - 1))
+          y += 1
+        }
+        best.toLong
+      }
       if m >= k
-    } yield (id, p) -> m).toMap
+    } yield (ids(x), ps(x).toLong) -> m).toMap
   }
 
   test("maximal lengths equal the brute-force scan on adversarial overlaps") {
