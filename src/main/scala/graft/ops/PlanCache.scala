@@ -50,31 +50,43 @@ final class PlanCache(capacity: Int) {
     * each recomputes the full frame — the memo saves nothing on the
     * very call that motivated it. Eager mode pays the frame once, up
     * front, inside the caller's timed region. Only meaningful for
-    * batch frames (count() on a streaming frame throws). */
-  def memo(df: DataFrame, eager: Boolean): DataFrame = synchronized {
+    * batch frames (count() on a streaming frame throws).
+    *
+    * The count runs OUTSIDE the cache-wide lock: persist and insert
+    * happen under it, so a caller memoizing an unrelated plan never
+    * waits on another thread's materializing job. A thread that hits
+    * a plan whose count is still running gets the persisted frame at
+    * once; its first action lands or reuses the same blocks, so the
+    * race is idempotent. Under contention the eager promise is
+    * weaker: such a hit may come back before the blocks have landed,
+    * and another thread's LRU eviction or [[Release.sweep]] may
+    * unpersist the frame during the count, so an eager memo can
+    * return unmaterialized or evicted (its actions then recompute). */
+  def memo(df: DataFrame, eager: Boolean): DataFrame = {
     val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized)
-    entries.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    entries.remove(key) match {
-      case Some(f) =>
-        // re-persist a memo something unpersisted out-of-band (e.g. a
-        // released PqIndex): a hit must always hand back a frame that
-        // honors the memo contract, not silently recompute forever
-        if (f.storageLevel == StorageLevel.NONE) {
-          f.persist(StorageLevel.MEMORY_AND_DISK)
-          if (eager) f.count()
-        }
-        entries.put(key, f) // re-insert at LRU tail
-        f
-      case None =>
-        while (entries.size >= capacity) {
-          val oldest = entries.head._1
-          entries.remove(oldest).foreach(_.unpersist(blocking = false))
-        }
-        val f = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if (eager) f.count()
-        entries.put(key, f)
-        f
+    val (f, fresh) = synchronized {
+      entries.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+      entries.remove(key) match {
+        case Some(f) =>
+          // re-persist a memo something unpersisted out-of-band (e.g. a
+          // released PqIndex): a hit must always hand back a frame that
+          // honors the memo contract, not silently recompute forever
+          val dropped = f.storageLevel == StorageLevel.NONE
+          if (dropped) f.persist(StorageLevel.MEMORY_AND_DISK)
+          entries.put(key, f) // re-insert at LRU tail
+          (f, dropped)
+        case None =>
+          while (entries.size >= capacity) {
+            val oldest = entries.head._1
+            entries.remove(oldest).foreach(_.unpersist(blocking = false))
+          }
+          val f = df.persist(StorageLevel.MEMORY_AND_DISK)
+          entries.put(key, f)
+          (f, true)
+      }
     }
+    if (eager && fresh) f.count()
+    f
   }
 }
 

@@ -108,12 +108,14 @@ object Dedup {
     }: _*)
 
   private def hashedShingles(df: DataFrame): DataFrame =
+    cachedShingles.memo(shinglePlan(df))
+
+  private def shinglePlan(df: DataFrame): DataFrame =
     // widenScan before the tokenize+shingle+hash map (guide §2.5):
     // serves every consumer of the memo (minhash/jaccard/containment)
-    cachedShingles.memo(
-      graft.ops.ScaleOps.widenScan(df, "doc_id")
-        .select(col("doc_id"), shingleHashCol(col("text")).as("hs"))
-        .filter(size(col("hs")) > 0))
+    graft.ops.ScaleOps.widenScan(df, "doc_id")
+      .select(col("doc_id"), shingleHashCol(col("text")).as("hs"))
+      .filter(size(col("hs")) > 0)
 
   /** Oracle-side twin of [[shingleHashCol]], parameterized on the source
     * relation so composed pipelines ([[Curation]]) can run it over an
@@ -487,19 +489,29 @@ object Dedup {
   def minhashSignatures(docs: DataFrame): DataFrame =
     minhashSigFrame(docs.select(col("doc_id"), col("text")))
 
-  private def minhashSigFrame(docs: DataFrame): DataFrame = {
+  /** [[minhashSignatures]] without the memo, for a frame signed once:
+    * a micro-batch's checkpointed survivors, whose memo would pin
+    * blocks derived from a checkpoint freed after the batch. */
+  private[graft] def minhashSignaturesOnce(docs: DataFrame): DataFrame =
+    minhashSigPlan(shinglePlan(docs.select(col("doc_id"), col("text"))))
+
+  // eager: the first action over a minhash query fans this frame into
+  // sibling broadcast builds, which race a lazy persist and each
+  // recompute the 16-permutation map (measured: 3 builds at
+  // 4.6/4.0/1.9 s CPU on q_dedup_incremental_minhash before the memo
+  // landed blocks)
+  private def minhashSigFrame(docs: DataFrame): DataFrame =
+    sigCache.memo(minhashSigPlan(hashedShingles(docs)), eager = true)
+
+  /** (doc_id, s0..) from a (doc_id, hs) shingle-hash frame. */
+  private def minhashSigPlan(shingles: DataFrame): DataFrame = {
     val sigCols = (0 until MinhashK).map { i =>
       element_at(col("sigv"), i + 1).as(s"s$i")
     }
-    // eager: the first action over a minhash query fans this frame
-    // into sibling broadcast builds, which race a lazy persist and
-    // each recompute the 16-permutation map (measured: 3 builds at
-    // 4.6/4.0/1.9 s CPU on q_dedup_incremental_minhash before the
-    // memo landed blocks)
-    sigCache.memo(hashedShingles(docs)
+    shingles
       .select(col("doc_id"),
         graft.functions.NativeExpressions.minhashSigs(col("hs"), MinhashK).as("sigv"))
-      .select(col("doc_id") +: sigCols: _*), eager = true)
+      .select(col("doc_id") +: sigCols: _*)
   }
 
   /** Signature frame -> (doc_id, band_idx, band_hash) LSH bucket keys. */

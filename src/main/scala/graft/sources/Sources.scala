@@ -137,11 +137,13 @@ object Sinks {
     * never rescan text" artifact both incremental dedup flows read:
     * `dedupIncremental` takes the (k1, k2) columns, and
     * `dedupIncrementalMinhash` the (doc_id, s0..) columns, directly. */
-  def signatureFrame(docs: DataFrame): DataFrame = {
-    import graft.queries.Dedup
-    val (k1, k2) = Dedup.contentKeyCols(col("text"))
+  def signatureFrame(docs: DataFrame): DataFrame =
+    withContentKeys(docs, graft.queries.Dedup.minhashSignatures(docs))
+
+  private def withContentKeys(docs: DataFrame, sigs: DataFrame): DataFrame = {
+    val (k1, k2) = graft.queries.Dedup.contentKeyCols(col("text"))
     docs.select(col("doc_id"), k1.as("k1"), k2.as("k2"))
-      .join(Dedup.minhashSignatures(docs), Seq("doc_id"), "left")
+      .join(sigs, Seq("doc_id"), "left")
   }
 
   /** Append one ingest batch's signature rows to the signature store
@@ -154,6 +156,13 @@ object Sinks {
     * micro-batches leave many small files. */
   def appendSignatures(docs: DataFrame, dir: String): Unit =
     signatureFrame(docs).write.mode(SaveMode.Append).parquet(dir)
+
+  /** [[appendSignatures]] for one micro-batch's checkpointed survivors:
+    * their signatures skip [[graft.queries.Dedup]]'s memo (see
+    * `Dedup.minhashSignaturesOnce`). */
+  private[graft] def appendBatchSignatures(docs: DataFrame, dir: String): Unit =
+    withContentKeys(docs, graft.queries.Dedup.minhashSignaturesOnce(docs))
+      .write.mode(SaveMode.Append).parquet(dir)
 
   /** Append one batch's GRAM-KEY rows to the span-dedup key store at
     * `dir` — the D27 lake artifact: per distinct word-n-gram md5, the

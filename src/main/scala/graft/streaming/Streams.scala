@@ -1067,16 +1067,30 @@ object Streams {
     * survivors) → decontamination (StreamingSpec's multi-batch
     * differential pins exactly that).
     *
+    * One decision per batch: the survivors are materialized once
+    * ([[graft.ops.Checkpoints.tracked]] + a count) BEFORE the append,
+    * and both the append and `each` read that materialization. A
+    * `persist()` cannot hold it: the append is a parquet insert into
+    * `lakeDir`, whose `recacheByPath` clears every cached plan that
+    * reads `lakeDir` — the survivors included, since they read the
+    * lake through `known` — so `each` would rerun the whole gate →
+    * dedup → decontamination plan. The checkpoint's blocks are freed
+    * when the batch's function returns. A block lost before then
+    * fails the batch, and the restarted query replays it, which the
+    * exactly-once note below covers.
+    *
     * Scale shape: the store holds ~150 bytes/doc (D1 keys + MinHash
     * signature — never text), appended as new parquet files per batch
-    * and re-read per batch; at 100 TB-lake scale the read is a
-    * columnar scan of key columns only, and the D13b restricted join
-    * keeps per-batch cost proportional to the batch. Exactly-once: on
-    * batch replay after a failure the append can double-write a
-    * survivor's signature row — duplicate signature ROWS only widen
-    * the candidate set (same flags — the rescore dedups by partner
-    * id via max), they never change `keep`, so the store is
-    * effectively idempotent for dedup purposes; compact it
+    * and re-read per batch as a columnar scan of key columns only.
+    * Per-batch cost is NOT yet proportional to the batch: every
+    * reference to `known` in the decision's plan re-reads the whole
+    * store, so per-batch cost grows with the lake.
+    *
+    * Exactly-once: on batch replay after a failure the append can
+    * double-write a survivor's signature row — duplicate signature
+    * ROWS only widen the candidate set (same flags — the rescore
+    * dedups by partner id via max), they never change `keep`, so the
+    * store is effectively idempotent for dedup purposes; compact it
     * periodically ([[graft.sources.Sinks.compactParquet]]). */
   def ingestStreamAppend(
       docs: DataFrame,
@@ -1097,14 +1111,15 @@ object Streams {
         // replayed batch see exactly the pre-append store.
         val known = graft.sources.Sinks.readSignatures(spark, lakeDir)
           .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
-        val surv = ingestBatch(batch, known, evalDocs, minWords, stops)
-        surv.persist()
+        val (surv, ck) = graft.ops.Checkpoints.tracked(
+          ingestBatch(batch, known, evalDocs, minWords, stops))
         try {
+          surv.count() // the decision, computed once, before the append
           // append FIRST, then hand to the caller: if `each` throws,
           // the batch re-runs and the double-append is harmless (see
           // idempotence note above); the reverse order could emit
           // survivors whose signatures never landed.
-          graft.sources.Sinks.appendSignatures(surv, lakeDir)
+          graft.sources.Sinks.appendBatchSignatures(surv, lakeDir)
           // staging lake for SCHEDULED COMPACTION
           // ([[graft.queries.Curation.compactShards]]): survivor DOC
           // rows (id + text, not just signatures) accumulate here; a
@@ -1112,11 +1127,10 @@ object Streams {
           // compactor's dropDuplicates(doc_id) erases — same
           // idempotence contract as the signature store.
           stagingDir.foreach(d => surv
-            .select(org.apache.spark.sql.functions.col("doc_id"),
-              org.apache.spark.sql.functions.col("text"))
+            .select(col("doc_id"), col("text"))
             .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(d))
           each(surv)
-        } finally { surv.unpersist(); () }
+        } finally graft.ops.Checkpoints.release(ck)
       }
       .start()
 
@@ -1170,19 +1184,31 @@ object Streams {
       evalDocs: DataFrame,
       minWords: Long,
       stops: Seq[String]): DataFrame = {
-    import graft.queries.{Contamination, Dedup, TextAnalysis}
-    val gated = batch
-      .join(TextAnalysis.gopherFlags(batch, minWords, 100000L, stops)
-        .filter(org.apache.spark.sql.functions.col("kept") === 1L)
-        .select("doc_id"), Seq("doc_id"), "left_semi")
-      .join(TextAnalysis.gopherRepFlags(batch)
-        .filter(org.apache.spark.sql.functions.col("kept") === 1L)
-        .select("doc_id"), Seq("doc_id"), "left_semi")
+    import graft.queries.{Contamination, Dedup}
+    val gated = gopherGates(batch, minWords, stops)
     val keep = Dedup.dedupIncrementalMinhash(gated, known)
-      .filter(org.apache.spark.sql.functions.col("keep") === 1L)
+      .filter(col("keep") === 1L)
       .select("doc_id")
     Contamination.decontamGate(
       gated.join(keep, Seq("doc_id"), "left_semi"), evalDocs)
+  }
+
+  /** The C16 ∧ C17 ingest gates as ONE map stage: the retain forms
+    * filtered in place, keeping `docs`' own columns — shared by
+    * [[ingestBatch]] and [[ingestStreamKeyed]] so the two cannot
+    * drift. Equal to semi-joining `docs` against both flag frames
+    * whenever `doc_id` is unique within `docs` (the ingest identity
+    * contract), without the three exchanges those joins cost. */
+  private def gopherGates(
+      docs: DataFrame, minWords: Long, stops: Seq[String]): DataFrame = {
+    import graft.queries.TextAnalysis
+    val own = docs.columns.toSeq.map(col)
+    TextAnalysis.gopherRepFlagsRetain(
+        TextAnalysis.gopherFlagsRetain(docs, minWords, 100000L, stops)
+          .filter(col("kept") === 1L)
+          .select(own: _*))
+      .filter(col("kept") === 1L)
+      .select(own: _*)
   }
 
   /** G11's KEYED-STATE form — the whole ingest decision as ONE
@@ -1221,15 +1247,10 @@ object Streams {
       minEstJaccard: Double = 0.5,
       maxPerBucket: Int = 1024): Dataset[IngestDecision] = {
     import docs.sparkSession.implicits._
-    import graft.queries.{Contamination, Dedup, TextAnalysis}
+    import graft.queries.{Contamination, Dedup}
     import graft.functions.TextFunctions.{shingles, words}
-    val gated = TextAnalysis.gopherRepFlagsRetain(
-        TextAnalysis.gopherFlagsRetain(
-            docs.select(col("doc_id"), col("text")), minWords, 100000L, stops)
-          .filter(col("kept") === 1L)
-          .select(col("doc_id"), col("text")))
-      .filter(col("kept") === 1L)
-      .select(col("doc_id"), col("text"))
+    val gated =
+      gopherGates(docs.select(col("doc_id"), col("text")), minWords, stops)
     // eval side is benchmark-sized by definition — its distinct shingle
     // set ships as a typed literal, making the contamination flag a
     // pure map stage (exact string membership, no hash FPs)

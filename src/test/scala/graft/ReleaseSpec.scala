@@ -2,6 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+object ReleaseSpec {
+  /** Static so a UDF running inside a task sees the same latches as
+    * the test thread (a closure would ship a deserialized copy). */
+  val countStarted = new java.util.concurrent.CountDownLatch(1)
+  val countRelease = new java.util.concurrent.CountDownLatch(1)
+}
+
 /** The session-hygiene contract behind the bench's per-query isolation
   * (the r4 lesson: blocks that outlive their query slowed 7 unrelated
   * queries >2x): [[graft.ops.Release.sweep]] must verifiably return the
@@ -29,6 +36,30 @@ class ReleaseSpec extends SparkSpec {
     graft.ops.Release.sweep(spark)
     // same canonical plan, post-sweep: must rebuild, not hit freed blocks
     assert(pc.memo(plan).count() == 500L)
+    graft.ops.Release.sweep(spark)
+  }
+
+  test("an eager memo's count does not hold the cache lock against another plan") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val pc = new graft.ops.PlanCache(capacity = 4)
+    val hold = udf { (x: Long) =>
+      ReleaseSpec.countStarted.countDown()
+      ReleaseSpec.countRelease.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      x
+    }.asNondeterministic()
+    // thread 1 sits inside memo's materializing count until released
+    val slow = Future(pc.memo(spark.range(1).select(hold(col("id")).as("id")), eager = true))
+    try {
+      assert(ReleaseSpec.countStarted.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the held count never started")
+      // thread 2 memoizes an unrelated plan meanwhile
+      val other = Future(pc.memo(spark.range(10).toDF("id"), eager = true))
+      assert(Await.result(other, 30.seconds).count() == 10L)
+      assert(!slow.isCompleted, "the held count finished before its release")
+    } finally ReleaseSpec.countRelease.countDown()
+    assert(Await.result(slow, 60.seconds).count() == 1L)
     graft.ops.Release.sweep(spark)
   }
 

@@ -1039,7 +1039,10 @@ class StreamingSpec extends SparkSpec {
       val replay = Seq(batch1, batch2).map { b =>
         val surv = Streams.ingestBatch(
           b.toDF().select(col("doc_id"), col("text")), known, eval, 10L, stops)
+        // materialized per step: the union would otherwise nest every
+        // earlier batch's whole dedup plan inside the next one's
         known = known.unionByName(graft.sources.Sinks.signatureFrame(surv))
+          .localCheckpoint()
         surv.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
       }
       assert(perBatch.toSeq == replay, s"stream $perBatch vs replay $replay")
@@ -1060,6 +1063,62 @@ class StreamingSpec extends SparkSpec {
         eval, 10L, stops).select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
       assert(rerun == Seq(5L), rerun)
     } finally query.stop()
+  }
+
+  test("ingestStreamAppend: `each` reads the materialized decision, released after the batch") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val stops = Seq("the", "a", "of", "and", "to", "in", "is")
+    def good(t: String) = Seq(
+      s"the cat ${t}aa big house", s"and dog ${t}bb warm garden",
+      s"of bird ${t}cc tall market", s"to fish ${t}dd wide basket",
+      s"a goat ${t}ee ripe apple", s"in lamb ${t}ff sweet pear",
+      s"is wolf ${t}gg fresh plum").mkString(" ")
+    val root = java.nio.file.Files.createTempDirectory("graft-lake-once")
+    val lakeDir = root.resolve("sigs").toString
+    graft.sources.Sinks.appendSignatures(
+      Seq((100L, good("lke"))).toDF("doc_id", "text"), lakeDir)
+    val eval = Seq((200L, good("evl"))).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    // jobs started while `each` runs carry this thread-local property
+    val probe = "graft.test.eachProbe"
+    val eachJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(probe) != null))
+          eachJobs.incrementAndGet()
+    }
+    val ckIds = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[StreamingSpec.Doc]
+    val query = Streams.ingestStreamAppend(mem.toDF(), lakeDir, eval,
+      minWords = 10L, stops = stops) { surv =>
+      ckIds ++= org.apache.spark.sql.graftbridge.Bridge.checkpointedRdd(surv).map(_.id)
+      sc.setLocalProperty(probe, "each")
+      try got ++= surv.select("doc_id").collect().map(_.getLong(0))
+      finally sc.setLocalProperty(probe, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      mem.addData(
+        StreamingSpec.Doc(1L, good("one")),   // survives
+        StreamingSpec.Doc(2L, good("lke")),   // near-dup of the lake doc
+        StreamingSpec.Doc(3L, "tiny doc"))    // fails the gates
+      query.processAllAvailable()
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      assert(got.toSeq == Seq(1L), got)
+      // one job: a scan of the materialized survivors, not a rerun of
+      // gate -> dedup -> decontamination after the append
+      assert(eachJobs.get == 1, s"${eachJobs.get} jobs inside each")
+      assert(ckIds.size == 1, "each should receive the checkpointed decision")
+      val persisted = sc.getPersistentRDDs
+      assert(ckIds.forall(id => !persisted.contains(id)),
+        s"decision checkpoint still persisted: $ckIds")
+    } finally {
+      query.stop()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("stream -> staging lake -> compactShards equals batch produceShards end to end") {
