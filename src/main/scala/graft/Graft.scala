@@ -332,10 +332,10 @@ object Graft {
       fitFraction: Double = 1.0): DataFrame =
     queries.Similarity.semanticDedupIncremental(incoming, lake, cells,
       minCosine, fitFraction = fitFraction)
-  /** SemDeDup over seeded-KMeans centroids instead of the first-k
+  /** SemDeDup over Lloyd-fitted centroids instead of the first-k
     * vectors — same pipeline, trained cells
     * ([[graft.queries.Similarity.semanticDedupTrained]]).
-    * Eager: this call runs the KMeans fit jobs before returning; the
+    * Eager: this call runs the Lloyd fit jobs before returning; the
     * result is a plan over the fitted centroids. */
   def semanticDedupTrained(embeddings: DataFrame, cells: Int = 10,
       minCosine: Double = 0.9, seed: Long = 0xC0FFEEL,
@@ -479,9 +479,9 @@ object Graft {
     queries.LinAlg.pcaProject(embeddings, iters)
   def annLsh(embeddings: DataFrame, dims: Int = 64): DataFrame = queries.Similarity.annLsh(embeddings, dims)
   def annIvf(embeddings: DataFrame): DataFrame = queries.Similarity.annIvf(embeddings)
-  /** IVF ANN over trained (seeded-KMeans) coarse centroids
+  /** IVF ANN over trained (Lloyd-fitted) coarse centroids
     * ([[graft.queries.Similarity.annIvfTrained]]).
-    * Eager: this call runs the KMeans fit jobs before returning; the
+    * Eager: this call runs the Lloyd fit jobs before returning; the
     * result is a plan over the fitted centroids. */
   def annIvfTrained(embeddings: DataFrame, cells: Int = 10, probes: Int = 3,
       fitFraction: Double = 1.0): DataFrame =

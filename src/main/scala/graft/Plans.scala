@@ -70,7 +70,7 @@ object Plans {
     "q_dup_spans_sa" -> "ExactSubstr by suffix-array rank doubling — NO hash in the plan: a TWO-WORD base-128 pack seeds rank_14 in the (widenScan-parallelized) base map, then the doubling rounds of (lead over doc window -> group-partition window) — k=20 is ONE round (14 -> 20), its count() riding the pair window; expect NO md5/xxhash expression anywhere and exactly one lead per round",
     "q_dup_spans_max" -> "prune-then-exact maximal lengths: ONE corpus md5 pass + h-window (D14b's cost) finds survivors; only they pay the text join-back, the gram-group-local capped-suffix sort, and the adjacent commonPrefixLen codegen kernel; the memoized positions frame feeds all five ladder rungs — expect ONE md5 map stage, not five",
     "q_dedup_semantic_text" -> "text-native SemDeDup: E9's one-scan hashed-embedding agg feeds D15's cell-keyed candidate join unchanged — text never shuffles, vectors exist only as the narrow (doc, dim, sum) frame until the within-cell pairing",
-    "q_dedup_semantic_trained" -> "trained SemDeDup: seeded-KMeans centers enter as a broadcast metadata frame, then the D15 core unchanged — packed-long HashAggregate argmax assignment (no exchange before the partial agg), cell-keyed pairing, keep-rule paint join; the fit is driver-side model state, never in the distributed plan",
+    "q_dedup_semantic_trained" -> "trained SemDeDup: Lloyd-fitted centers enter as a broadcast metadata frame, then the D15 core unchanged — packed-long HashAggregate argmax assignment (no exchange before the partial agg), cell-keyed pairing, keep-rule paint join; the fit is driver-side model state, never in the distributed plan",
     "q_tokenize_ids" -> "id-level tokenization: DISTINCT-word encoder map with the merge-rank table broadcast, word-keyed id join back onto the positional explode, per-doc sort-collect reassembly — the corpus pays one text scan and shuffles only (doc_id, pos, id) integers",
     "q_hybrid_search" -> "hybrid retrieval: memoized tf + sparse-embedding frames, posting-list and dim-keyed candidate joins (stats broadcast), every per-query ranking window rewritten to TopKPerKeyPartial/Final, one poolK-bounded full-outer fuse join",
     "q_hybrid_search_lsh" -> "bucketed hybrid retrieval: sign-projection bit sums aggregated in the sparse format (tables-x inflation, never dims-x), the (t, bucket) candidate equi-join, candidate-restricted integer-dot rescore, same shared BM25/fusion stages as the dense row",

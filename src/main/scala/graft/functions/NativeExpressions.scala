@@ -11,13 +11,17 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for graft's hot per-row kernels
   * (SURVEY.md §7 M9). Semantics are IDENTICAL to the higher-order-function
-  * forms they replace (and to the DuckDB oracle fragments); the point is
-  * that each row is one compiled JVM loop inside whole-stage codegen
-  * instead of thousands of interpreted lambda steps — the difference
-  * between a dedup pass that scales to 100 TB and one that doesn't.
+  * forms they replace (and to the DuckDB oracle fragments), with one
+  * named exception: [[DotProduct]] on arrays of DIFFERENT lengths folds
+  * their shared prefix, where the `zip_with` form returns null. The
+  * point is that each row is one compiled JVM loop inside whole-stage
+  * codegen instead of thousands of interpreted lambda steps — the
+  * difference between a dedup pass that scales to 100 TB and one that
+  * doesn't.
   *
-  * All of them assume non-null array elements (their inputs come from
-  * split/transform of non-null columns).
+  * [[DotProduct]] and [[L2Sq]] return null on a null element, as their
+  * higher-order forms do; the others assume non-null array elements
+  * (their inputs come from split/transform of non-null columns).
   */
 object NativeExpressions {
 
@@ -181,16 +185,24 @@ object NativeExpressions {
     * dot product of the determinism contract ([[VectorFunctions]]).
     * Accepts float or double arrays on either side.
     *
+    * Null contract: a null element on either side → null, as in
+    * [[VectorFunctions.dotHof]] and [[L2Sq]]. The result is nullable
+    * only when an input or its element type is.
+    *
     * Length contract: inputs are expected equal-length (embeddings of one
     * model, or an embedding against a same-dims plane). On mismatch the
     * product runs over the shared min(len) prefix — deliberate, so fixed
-    * `dims` plane literals work against any ≥ dims embedding — but note
-    * the DuckDB oracle fragment indexes by the FIRST argument's length,
-    * so oracle-checked plans must put the (shorter-or-equal) probe first. */
+    * `dims` plane literals work against any ≥ dims embedding, and the
+    * one place this kernel departs from `dotHof` (whose `zip_with` pads
+    * the shorter side with null and returns null) — but note the DuckDB
+    * oracle fragment indexes by the FIRST argument's length, so
+    * oracle-checked plans must put the (shorter-or-equal) probe first. */
   case class DotProduct(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "graft_dot"
+    override def nullable: Boolean =
+      left.nullable || right.nullable || elemsNullable
     override def checkInputDataTypes(): TypeCheckResult = {
       val l = requireType(prettyName, isVec(left.dataType),
         "ARRAY<FLOAT|DOUBLE>", left.dataType)
@@ -202,6 +214,9 @@ object NativeExpressions {
     private def elemIsFloat(e: Expression): Boolean =
       e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
+    private def elemsNullable: Boolean =
+      Seq(left, right).exists(_.dataType.asInstanceOf[ArrayType].containsNull)
+
     override def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]
       val y = b.asInstanceOf[ArrayData]
@@ -211,6 +226,7 @@ object NativeExpressions {
       var acc = 0.0
       var i = 0
       while (i < n) {
+        if (x.isNullAt(i) || y.isNullAt(i)) return null
         val xv = if (fx) x.getFloat(i).toDouble else x.getDouble(i)
         val yv = if (fy) y.getFloat(i).toDouble else y.getDouble(i)
         acc += xv * yv
@@ -225,10 +241,17 @@ object NativeExpressions {
         val i = ctx.freshName("i")
         val getA = if (elemIsFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
         val getB = if (elemIsFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
+        // the null check only where an element can be null (then the
+        // result is nullable and ev.isNull is a variable)
+        val nullCheck =
+          if (elemsNullable)
+            s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
+          else ""
         s"""
         int $n = java.lang.Math.min($a.numElements(), $b.numElements());
         double ${ev.value}_acc = 0.0;
         for (int $i = 0; $i < $n; $i++) {
+          $nullCheck
           ${ev.value}_acc += $getA * $getB;
         }
         ${ev.value} = ${ev.value}_acc;

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** E14 — Lloyd's k-means with every iteration ORACLE-EXACT: the house
   * trained-pipeline story so far replays fitted STATE (D15c/E13 inject
@@ -15,23 +16,24 @@ import org.apache.spark.sql.functions._
   *  - init = the k smallest-vec_id vectors (the D15 deterministic-
   *    centroid convention), not a random sample;
   *  - assignment = nearest centroid by L2 over a fixed-shape IEEE
-  *    chain (float→double casts, strict left fold), argmin as the
-  *    packed-long map-side `min` (`round(d2·2^30)·2^21 + c_id` —
-  *    quantized-distance ties to the smaller c_id, mirrored by the
-  *    oracle's ORDER BY);
+  *    chain (float→double casts, strict left fold), argmin by
+  *    `(round(d2·2^30), c_id)` — quantized-distance ties to the
+  *    smaller c_id, mirrored by the oracle's ORDER BY;
   *  - update = the E5 fixed-point mean: components quantize to 1/4096
   *    integers, INTEGER-sum per (cell, dim) (exact, commutative,
-  *    shuffle-safe — a float sum would be partition-order-dependent
-  *    and unreproducible), and the new centroid is one double division
-  *    at read time. Empty clusters keep their previous centroid.
+  *    partition-order-free — a float sum would be partition-order-
+  *    dependent and unreproducible), and the new centroid is one
+  *    double division on the driver. Empty clusters keep their
+  *    previous centroid.
   *
-  * Scale shape per iteration: one broadcast-centroids nested-loop
-  * whose packed argmin collapses map-side (the D15 HashAggregate
-  * lesson — nothing shuffles but (vec_id, cell)), then one posexplode
-  * + integer agg on the k×dims key space. Centroids are driver-side
-  * model state (k·dims doubles — metadata-scale by nature, the same
-  * contract as every fitted model here); each iteration's update
-  * rides ONE collect of that k×dims frame, never vector data.
+  * Every k-means fit in the tree runs this one Lloyd step ([[lloyd]]):
+  * an iteration is one `mapPartitions` pass that assigns each vector
+  * and adds its quantized components into long arrays, then one
+  * element-wise reduce — no per-vector rows, no shuffle, and no plan
+  * per iteration (centroids travel in a broadcast). One pass advances
+  * several SLICES of the vector at once ([[fitSlices]]: a PQ build's
+  * coarse cells and m codebooks). Centroids are driver-side model
+  * state, metadata-scale by nature; no vector data is collected.
   *
   * At 100 TB: iterations cost one corpus pass each (the Lloyd floor);
   * fit on a sample and serve assignments via [[Similarity]]'s IVF/PQ
@@ -49,6 +51,13 @@ object KMeansLloyd {
     * assignment ties within 2^-30 go to the smaller c_id (mirrored in
     * the oracle). */
   private val DQ = (1L << 30).toDouble
+
+  /** Bound on d2·2^30: the ·2^21 cell pack stays below 2^62. */
+  private val DomainBound = (1L << 41).toDouble
+
+  private val DomainMessage =
+    "kmeans: squared distance exceeds the 2^41 packing domain " +
+      "— normalize or rescale the embeddings"
 
   /** Run `iters` Lloyd iterations with k centroids over
     * (vec_id, embedding) and return the fitted model in long format:
@@ -77,11 +86,11 @@ object KMeansLloyd {
     val v = Similarity.fitFrame(
       embeddings.select(col("vec_id"), col("embedding")),
       fitFraction, 0L, k, "kmeans")
-    val (cents, _, lastCounts) = fitLoop(v, k, iters)
+    val fit = fitLoop(v, k, iters)
     Similarity.releaseFitFrame(v, fitFraction)
-    cents.flatMap { case (cId, emb) =>
+    fit.cents.toSeq.zipWithIndex.flatMap { case (emb, cId) =>
       emb.zipWithIndex.map { case (c, d) =>
-        (cId, d.toLong, lastCounts.getOrElse(cId, 0L), c)
+        (cId.toLong, d.toLong, fit.counts(cId), c)
       }
     }.toDF("c_id", "dim", "n_vecs", "centroid")
       .orderBy("c_id", "dim")
@@ -111,194 +120,219 @@ object KMeansLloyd {
       fitFraction: Double = 1.0): DataFrame = {
     // the kmeans() guards, mirrored: a k past the 2^21 packed-argmin
     // domain silently corrupts cell ids via pmod collisions, and
-    // iters = 0 would return the null lastAssigned frame (advisor r13)
+    // iters = 0 would return the initial centroids' assignment
+    // (advisor r13)
     require(k > 0 && k < (1 << 21) - 1, s"k must be in [1, 2^21), got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val v = embeddings.select(col("vec_id"), col("embedding"))
-    if (fitFraction >= 1.0) fitLoop(v, k, iters)._2
+    if (fitFraction >= 1.0) assignStep(v, withIds(fitLoop(v, k, iters).assignedUnder))
     else {
       val s = Similarity.fitFrame(v, fitFraction, 0L, k, "kmeansAssign")
-      val (cents, _, _) = fitLoop(s, k, iters)
+      val fit = fitLoop(s, k, iters)
       Similarity.releaseFitFrame(s, fitFraction)
-      assignStep(v, cents)
+      assignStep(v, withIds(fit.cents))
     }
   }
 
-  /** The Lloyd loop shared by [[kmeans]] and [[assignments]]:
-    * (final centroids, last-iteration assignment frame, last counts).
-    * Accepts float OR double embedding arrays (both cast to double in
-    * the distance chain — the corpus-map path feeds exact-integer-
-    * derived unit DOUBLE vectors, the E14 row the parquet floats). */
-  private def fitLoop(v: DataFrame, k: Int, iters: Int)
-      : (Seq[(Long, Array[Double])], DataFrame, Map[Long, Long]) = {
-    val spark = v.sparkSession
-    import spark.implicits._
-    // init: the k smallest vec_ids, re-keyed dense (correct on any id
-    // space — the D15 rank lesson), components as exact doubles
-    val initRows = v.orderBy(col("vec_id")).limit(k)
-      .collect().sortBy(_.getLong(0)).zipWithIndex
-      .map { case (r, i) =>
-        (i.toLong, r.getSeq[Number](1).map(_.doubleValue()).toArray)
-      }.toSeq
-    require(initRows.nonEmpty, "kmeans: empty input")
+  /** One component range `[offset, offset + len)` of the fitted
+    * vectors and the number of cells `k` fit over it. */
+  private[queries] final case class Slice(offset: Int, len: Int, k: Int)
 
-    var cents: Seq[(Long, Array[Double])] = initRows
-    var lastAssigned: DataFrame = null
-    var lastCounts: Map[Long, Long] = Map.empty
-    // Exact early stop (r16, guide §2.4 — remove work outright): once
-    // an update leaves every centroid BIT-IDENTICAL to the previous
-    // iteration, the fit is at an exact fixed point — assignment
-    // depends only on the centroids, so every further iteration would
-    // recompute the same assignment, the same quantized sums, and the
-    // same centroids. Skipping those iterations changes nothing the
-    // fixed-iteration oracle CTEs could observe (their extra
-    // iterations replay the identical state), and saves one full-pass
-    // aggregation job per skipped iteration on fits called with a
-    // generous budget (the PQ/OPQ maxIter=20 disk build).
-    var converged = false
-    for (_ <- 1 to iters if !converged) {
-      val assigned = assignStep(v, cents)
-      lastAssigned = assigned
-      // E5 fixed-point update: quantize once, integer-sum per
-      // (cell, dim) — one collect of the k×dims model frame. On the
-      // literal-assignment path the cell is a per-row expression, so
-      // the sums pass needs NO join back to the assignment frame —
-      // each iteration is ONE map + k×dims-key combinable agg, with
-      // no corpus-sized exchange at all (guide §2.4).
-      val sumSrc =
-        if (litAssignable(cents))
-          v.select(packedMin(col("embedding"), cents).as("cell"),
-            col("embedding"))
-        else v.join(assigned, Seq("vec_id"))
-      val sums = sumSrc
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "x")))
-        .select(col("cell"), col("dim"),
-          round(col("x").cast("double") * lit(CQ)).cast("long").as("q"))
-        .groupBy("cell", "dim")
-        .agg(count(lit(1)).as("n"), sum(col("q")).as("qsum"))
-        .collect()
-      val byCell = sums.groupBy(_.getLong(0))
-      lastCounts = byCell.map { case (c, rows) => c -> rows.head.getLong(2) }
-      val next = cents.map { case (cId, prev) =>
-        byCell.get(cId) match {
-          case None => (cId, prev) // empty cluster keeps its centroid
-          case Some(rows) =>
-            val nxt = prev.clone()
-            rows.foreach { r =>
-              nxt(r.getInt(1)) =
-                (r.getLong(3).toDouble / r.getLong(2).toDouble) / CQ
-            }
-            (cId, nxt)
-        }
-      }
-      converged = next.iterator.zip(cents.iterator).forall {
-        case ((_, a), (_, b)) => java.util.Arrays.equals(a, b)
-      }
-      cents = next
-    }
-    (cents, lastAssigned, lastCounts)
+  /** A slice's centroids in c_id order (fewer than k when fewer vectors
+    * were fit), the centroids its last assignment used, and that
+    * assignment's members per cell. */
+  private[queries] final case class SliceFit(
+      cents: Array[Array[Double]],
+      assignedUnder: Array[Array[Double]],
+      counts: Array[Long])
+
+  private def withIds(cents: Array[Array[Double]]): Seq[(Long, Array[Double])] =
+    cents.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+
+  /** The whole-vector fit. Accepts float OR double embedding arrays
+    * (both widen to double — the corpus-map path feeds exact-integer-
+    * derived unit DOUBLE vectors, the E14 row the parquet floats). */
+  private def fitLoop(v: DataFrame, k: Int, iters: Int): SliceFit = {
+    val init = initRows(v, k)
+    lloyd(v, init, Seq(Slice(0, init.head._2.length, k)), iters).head
   }
 
   /** Centroid-only fit over any `(vec_id, embedding)` frame — the
-    * quantizer-build entry ([[Similarity]]'s PQ/OPQ codebooks and
-    * coarse cells, r16): [[fitLoop]]'s centroids, dense ids 0..k-1 in
-    * id order. One deterministic init collect plus ONE combinable
-    * full-pass aggregation job per (non-converged) iteration — no
-    * VectorUDT conversion, no k-means|| init passes, and on the
-    * literal-argmin path no corpus-sized exchange at all, vs
-    * ml.KMeans's ~10 jobs per fit (the r15 verdict's OPQ job-count
-    * floor, ask #5). Callers' oracle rows are fit-value-independent
-    * (exhaustive-probe ≡ brute force, or stash-literal replay), so
-    * centroid VALUES moving off ml.KMeans's is sanctioned there;
-    * recall floors stay pinned in OpqSpec/AnnRecallSpec. */
+    * IVF coarse-cell and semantic-cell entry: [[fitLoop]]'s
+    * centroids, dense ids 0..k-1 in id order. */
   private[queries] def fitCentroids(
       v: DataFrame, k: Int, iters: Int): Seq[(Long, Array[Double])] =
-    fitLoop(v, k, iters)._1
+    withIds(fitLoop(v, k, iters).cents)
 
-  /** LOCKSTEP multi-subspace Lloyd fit (r16): the m per-subspace
-    * codebook fits of a PQ/OPQ build are independent given the shared
-    * vector frame — each subspace's update reads only its own slice —
-    * so one pass can advance ALL of them: per iteration, ONE
-    * combinable aggregation job computes every subspace's quantized
-    * (cell, dim) sums, instead of m separate jobs (m full scans) per
-    * iteration (guide §2.4 — remove redundant passes outright; also
-    * m× fewer scheduler round-trips, the r15 verdict's OPQ job-count
-    * floor). Centroids are BIT-IDENTICAL to m independent [[fitLoop]]
-    * runs: same k-smallest-id init per slice, same packed-argmin
-    * assignment, same exact-integer fixed-point sums (commutative, so
-    * sharing the aggregation changes nothing), same update/empty-cell
-    * carry, same exact early stop (all subspaces at a fixed point).
-    * Returns codebooks in subspace order, each k × dsub with dense
-    * c_ids 0..k-1 implicit in row order. */
-  private[queries] def fitSubspaceCodebooks(
-      v: DataFrame, m: Int, dsub: Int, k: Int, iters: Int)
-      : Seq[Array[Array[Double]]] = {
-    require(m >= 1 && k > 0 && iters >= 1, s"bad fit shape m=$m k=$k iters=$iters")
-    // past the literal-argmin bound (ksub → 256 at scale pushes
-    // k×dsub literals per subspace over the codegen budget), fall
-    // back to independent per-subspace fits on the broadcast-join
-    // path — same centroids, m× the passes
-    if (m == 1 || k.toLong * dsub > LitAssignMaxCoeffs)
-      return (0 until m).map { j =>
-        fitLoop(v.select(col("vec_id"),
-          slice(col("u"), j * dsub + 1, dsub).as("embedding")), k, iters)
-          ._1.sortBy(_._1).map(_._2).toArray
+  /** Lloyd fits over several slices of one `(vec_id, embedding)` frame
+    * with one init collect and one job per iteration, however many
+    * slices. Each slice's result is bit-identical to a [[kmeans]] fit
+    * of that slice alone with its k and `iters` (its init is a prefix
+    * of the shared one; sums, carry and early stop are per slice). The
+    * loop ends when every slice has converged or after `iters` passes. */
+  private[queries] def fitSlices(
+      v: DataFrame, slices: Seq[Slice], iters: Int): Seq[SliceFit] =
+    lloyd(v, initRows(v, slices.map(_.k).max), slices, iters)
+
+  /** The k smallest-vec_id vectors of `v` in id order, as exact
+    * doubles (re-keyed dense, correct on any id space — the D15 rank
+    * lesson). */
+  private def initRows(v: DataFrame, k: Int): Array[(Long, Array[Double])] = {
+    val rows = described(v, "kmeans fit: init") {
+      v.select(col("vec_id"), col("embedding"))
+        .orderBy(col("vec_id")).limit(k).collect()
+    }.sortBy(_.getLong(0))
+    require(rows.nonEmpty, "kmeans: empty input")
+    rows.map { r =>
+      val id = r.getLong(0)
+      if (r.isNullAt(1)) throw badVector(id, "has a null embedding")
+      val comps = r.getSeq[Number](1).zipWithIndex.map { case (x, i) =>
+        if (x == null) throw badVector(id, s"has a null element at index $i")
+        x.doubleValue()
+      }.toArray
+      id -> comps
+    }
+  }
+
+  /** The one Lloyd loop. Per iteration: broadcast the unconverged
+    * slices' centroids, run [[accumulate]] over every partition,
+    * reduce the per-partition long arrays element-wise, and divide once
+    * per (slice, cell, dim) on the driver. */
+  private def lloyd(
+      v: DataFrame, init: Array[(Long, Array[Double])], slices: Seq[Slice],
+      iters: Int): Seq[SliceFit] = {
+    val width = slices.map(s => s.offset + s.len).max
+    init.foreach { case (id, e) => requireWidth(id, e.length, width) }
+    val isFloat =
+      v.schema("embedding").dataType.asInstanceOf[ArrayType].elementType == FloatType
+    // compiled once: every iteration reruns this RDD, never a new plan
+    // (an upstream shuffle runs here, once, and later passes reuse it)
+    val rows = described(v, "kmeans fit: init") {
+      v.select(col("vec_id").cast("long"), col("embedding")).queryExecution.toRdd
+    }
+    val fits = slices.map { s =>
+      val c = init.take(s.k).map(_._2.slice(s.offset, s.offset + s.len))
+      SliceFit(c, c, new Array[Long](c.length))
+    }.toArray
+    val active = Array.fill(fits.length)(true)
+    var it = 0
+    while (it < iters && active.contains(true)) {
+      val live = fits.indices.filter(active).toArray
+      val bc = v.sparkSession.sparkContext.broadcast(live.map(fits(_).cents))
+      val offsets = live.map(slices(_).offset)
+      val sums =
+        try described(v, s"kmeans fit: pass ${it + 1}") {
+          rows.mapPartitions(part =>
+              Iterator.single(accumulate(part, bc.value, offsets, width, isFloat)))
+            .reduce { (a, b) => a.indices.foreach(i => a(i) += b(i)); a }
+        } catch {
+          // bad input found inside a task: rethrow its named error
+          case e: org.apache.spark.SparkException
+              if e.getCause.isInstanceOf[IllegalArgumentException] =>
+            throw e.getCause
+        } finally bc.destroy()
+      var base = 0
+      live.foreach { s =>
+        val prev = fits(s).cents
+        val (k, len) = (prev.length, slices(s).len)
+        val cnt = sums.slice(base, base + k)
+        val next = Array.tabulate(k) { c =>
+          if (cnt(c) == 0L) prev(c) // empty cluster keeps its centroid
+          else Array.tabulate(len)(d =>
+            (sums(base + k + c * len + d).toDouble / cnt(c).toDouble) / CQ)
+        }
+        base += k * (1 + len)
+        // exact early stop (remove work outright): a
+        // bit-identical update is a fixed point — assignment depends
+        // only on the centroids, so every further pass would recompute
+        // the same sums. The fixed-iteration oracle CTEs replay the
+        // identical state through their extra iterations.
+        active(s) = !next.indices.forall(c => java.util.Arrays.equals(next(c), prev(c)))
+        fits(s) = SliceFit(next, prev, cnt)
       }
-    // ONE init collect for every subspace: fitLoop's init is the k
-    // smallest vec_ids of the SAME frame, so each subspace's init is
-    // a slice of the same collected rows
-    val initRows = v.select(col("vec_id"), col("u"))
-      .orderBy(col("vec_id")).limit(k)
-      .collect().sortBy(_.getLong(0))
-      .map(_.getSeq[Number](1).map(_.doubleValue()).toArray)
-    require(initRows.nonEmpty, "fitSubspaceCodebooks: empty input")
-    var cents: Array[Array[(Long, Array[Double])]] = Array.tabulate(m) { j =>
-      initRows.zipWithIndex.map { case (u, i) =>
-        (i.toLong, u.slice(j * dsub, (j + 1) * dsub))
+      it += 1
+    }
+    fits.toSeq
+  }
+
+  /** One partition of a Lloyd pass: each vector joins, per slice, the
+    * cell of [[quantizedD2]]'s `(round(d2·2^30), c_id)` minimum — the
+    * packed `min` of [[packedDistCol]] — and adds its components,
+    * quantized to `round(x·4096)`, as longs. Result layout, per slice
+    * in order: k counts, then k·len sums (cell-major). */
+  private def accumulate(
+      part: Iterator[InternalRow], cents: Array[Array[Array[Double]]],
+      offsets: Array[Int], width: Int, isFloat: Boolean): Array[Long] = {
+    val bases = cents.scanLeft(0)((b, c) => b + c.length * (1 + c.head.length))
+    val acc = new Array[Long](bases.last)
+    val x = new Array[Double](width)
+    part.foreach { r =>
+      val id = r.getLong(0)
+      if (r.isNullAt(1)) throw badVector(id, "has a null embedding")
+      val e = r.getArray(1)
+      requireWidth(id, e.numElements(), width)
+      for (i <- 0 until width) {
+        if (e.isNullAt(i)) throw badVector(id, s"has a null element at index $i")
+        x(i) = if (isFloat) e.getFloat(i).toDouble else e.getDouble(i)
+      }
+      for (s <- cents.indices) {
+        val (cs, off) = (cents(s), offsets(s))
+        var best = 0
+        var bestQ = quantizedD2(x, off, cs(0))
+        for (c <- 1 until cs.length) {
+          val q = quantizedD2(x, off, cs(c))
+          if (q < bestQ) { best = c; bestQ = q }
+        }
+        val len = cs(0).length
+        acc(bases(s) + best) += 1L
+        val at = bases(s) + cs.length + best * len
+        for (j <- 0 until len) acc(at + j) += roundHalfUp(x(off + j) * CQ)
       }
     }
-    var converged = false
-    for (_ <- 1 to iters if !converged) {
-      // one row per (subspace, cell, dim): the same posexplode volume
-      // the m separate fits produced COMBINED, in one job
-      val subStructs = (0 until m).map { j =>
-        struct(lit(j).as("j"),
-          packedMin(slice(col("u"), j * dsub + 1, dsub), cents(j).toSeq).as("cell"),
-          slice(col("u"), j * dsub + 1, dsub).as("sub"))
-      }
-      val sums = v
-        .select(explode(array(subStructs: _*)).as("s"))
-        .select(col("s.j"), col("s.cell"), posexplode(col("s.sub")).as(Seq("dim", "x")))
-        .select(col("j"), col("cell"), col("dim"),
-          round(col("x").cast("double") * lit(CQ)).cast("long").as("q"))
-        .groupBy("j", "cell", "dim")
-        .agg(count(lit(1)).as("n"), sum(col("q")).as("qsum"))
-        .collect()
-      val byJ = sums.groupBy(_.getInt(0))
-      val next = Array.tabulate(m) { j =>
-        val byCell = byJ.getOrElse(j, Array.empty[org.apache.spark.sql.Row])
-          .groupBy(_.getLong(1))
-        cents(j).map { case (cId, prev) =>
-          byCell.get(cId) match {
-            case None => (cId, prev) // empty cluster keeps its centroid
-            case Some(rows) =>
-              val nxt = prev.clone()
-              rows.foreach { r =>
-                nxt(r.getInt(2)) =
-                  (r.getLong(4).toDouble / r.getLong(3).toDouble) / CQ
-              }
-              (cId, nxt)
-          }
-        }
-      }
-      converged = (0 until m).forall { j =>
-        next(j).iterator.zip(cents(j).iterator).forall {
-          case ((_, a), (_, b)) => java.util.Arrays.equals(a, b)
-        }
-      }
-      cents = next
+    acc
+  }
+
+  /** `round(d2·2^30)` of `x[off, off + len)` against one centroid, d2
+    * the strict left fold of [[graft.functions.NativeExpressions.L2Sq]]
+    * (float→double, then `acc += t·t`), under the 2^41 domain guard. */
+  private def quantizedD2(x: Array[Double], off: Int, cent: Array[Double]): Long = {
+    var d2 = 0.0
+    var j = 0
+    while (j < cent.length) {
+      val t = x(off + j) - cent(j)
+      d2 += t * t
+      j += 1
     }
-    cents.toSeq.map(_.sortBy(_._1).map(_._2))
+    if (!(d2 * DQ < DomainBound)) throw new IllegalArgumentException(DomainMessage)
+    roundHalfUp(d2 * DQ)
+  }
+
+  /** Run `body` with its jobs described as `what` (the Spark UI and
+    * event-log job description; listeners read it from the job
+    * properties, which AQE's stage threads inherit), then restore the
+    * caller's description. */
+  private def described[A](v: DataFrame, what: String)(body: => A): A = {
+    val sc = v.sparkSession.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, what)
+    try body finally sc.setLocalProperty(key, prev)
+  }
+
+  private def requireWidth(id: Long, n: Int, width: Int): Unit =
+    if (n != width) throw badVector(id, s"has $n components, the fit expects $width")
+
+  private def badVector(id: Long, what: String) =
+    new IllegalArgumentException(s"kmeans: vec_id $id $what")
+
+  /** `round(x)` as Spark's `round` computes it on a double, cast to
+    * long: half away from zero (`Math.round` rounds -2.5 to -2, Spark
+    * to -3). `a - floor(a)` is exact, so no tie is misread. */
+  private[graft] def roundHalfUp(x: Double): Long = {
+    val a = math.abs(x)
+    val f = math.floor(a)
+    val r = if (a - f >= 0.5) f + 1.0 else f
+    (if (x < 0) -r else r).toLong
   }
 
   /** The packed quantized-distance key for ONE (embedding, centroid)
@@ -318,9 +352,8 @@ object KMeansLloyd {
     // CPU in the literal-argmin assignment at dims = 64
     val d2 = graft.functions.NativeExpressions.l2sq(emb, cEmb)
     val domain = coalesce(
-      assert_true(d2 * lit(DQ) < lit((1L << 41).toDouble),
-        lit("kmeans: squared distance exceeds the 2^41 packing domain " +
-          "— normalize or rescale the embeddings")).cast("long"),
+      assert_true(d2 * lit(DQ) < lit(DomainBound), lit(DomainMessage))
+        .cast("long"),
       lit(0L))
     (round(d2 * lit(DQ)).cast("long") * (1L << 21)) + cId + domain
   }
@@ -358,9 +391,11 @@ object KMeansLloyd {
     * [[packedDistCol]] values the groupBy computes, with zero exchanges
     * (guide §2.4; the frozen-path/fitted-path equality CorpusMapSpec
     * pins). Large sets keep the broadcast nested-loop whose packed
-    * argmin collapses map-side. Shared by every [[fitLoop]] iteration
-    * and the sample-fit full-corpus assign in [[assignments]], so the
-    * two paths cannot drift. */
+    * argmin collapses map-side. Shared by both [[assignments]] paths
+    * and the IVF-trained assignment; the fit's own argmin
+    * ([[accumulate]]) computes the same `(round(d2·2^30), c_id)`
+    * minimum, which CorpusMapSpec's frozen-vs-fitted equality and the
+    * q_kmeans/q_corpus_map oracles pin. */
   private[queries] def assignStep(
       v: DataFrame, cents: Seq[(Long, Array[Double])]): DataFrame = {
     if (litAssignable(cents))
@@ -390,7 +425,7 @@ object KMeansLloyd {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val v = embeddings.select(col("vec_id"), col("embedding"))
     val s = Similarity.fitFrame(v, fitFraction, 0L, k, "kmeansCentroids")
-    val cents = fitLoop(s, k, iters - 1)._1
+    val cents = withIds(fitLoop(s, k, iters - 1).cents)
     Similarity.releaseFitFrame(s, fitFraction)
     cents
   }

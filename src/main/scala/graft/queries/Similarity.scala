@@ -50,10 +50,11 @@ object Similarity {
     * that), and sample-fit recall is gated in SampleFitSpec + the
     * ScaleProbe sample-fit census. When the draw leaves fewer rows
     * than the fit needs (`minRows` — the largest k it trains), the
-    * guard fails loudly: an underfed ml.KMeans silently returns
-    * degenerate duplicate centroids, the failure mode a 100 TB
-    * operator must never hide. The guard's count() runs only on the
-    * sampled path and is noise next to the fits it protects. */
+    * guard fails loudly: a Lloyd fit on fewer vectors than cells
+    * silently returns fewer centroids than asked for, the failure
+    * mode a 100 TB operator must never hide. The guard's count() runs
+    * only on the sampled path and is noise next to the fits it
+    * protects. */
   private[queries] def fitFrame(
       df: DataFrame, fitFraction: Double, seed: Long,
       minRows: Long, what: String): DataFrame = {
@@ -67,13 +68,10 @@ object Similarity {
       val s = df
         .filter(
           Shards.fitKeep(col("vec_id"), fitFraction, ((seed % p1) + p1) % p1))
-        // persist the SAMPLE: without this, every downstream KMeans
-        // fit re-filters the corpus — and worse, ml.KMeans sees the
-        // filtered frame's storageLevel as NONE and re-persists it
-        // internally PER FIT, so a 1+m-fit build paid 1+m corpus
-        // filter-scans and the "sample" fit measured SLOWER than the
-        // full one (the round-13 probe caught exactly this). The
-        // guard count() below doubles as the materializing pass;
+        // persist the SAMPLE: without this, every Lloyd iteration
+        // re-filters the corpus (the round-13 probe caught a "sample"
+        // fit measuring SLOWER than the full one for exactly this).
+        // The guard count() below doubles as the materializing pass;
         // callers release via [[releaseFitFrame]] once fits finish.
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // unpersist on the guard's failure path: an underfed draw throws
@@ -563,11 +561,10 @@ object Similarity {
       seed: Long = 0xC0FFEEL,
       fitFraction: Double = 1.0): DataFrame = {
     val v = withNorms(embeddings)
-    // fit: the house Lloyd loop (r16, replacing ml.KMeans — one
-    // combinable aggregation job per iteration, no VectorUDT pass;
-    // this row's oracle is the exhaustive-probe ≡ brute-force
-    // equivalence, which holds whatever centroids the fit produced,
-    // and probe-limited recall stays pinned in AnnRecallSpec)
+    // fit: the house Lloyd loop (one job per iteration; this row's
+    // oracle is the exhaustive-probe ≡ brute-force equivalence, which
+    // holds whatever centroids the fit produced, and probe-limited
+    // recall stays pinned in AnnRecallSpec)
     val ff = fitFrame(v.select(col("vec_id"), col("embedding")),
       fitFraction, seed, cells, "annIvfTrained")
     val fitCents = KMeansLloyd.fitCentroids(ff, cells, iters = 8)
@@ -729,9 +726,9 @@ object Similarity {
   /** E3 at full production shape: IVF-PQ with asymmetric-distance
     * shortlisting and exact rescore — the index layout 100 TB ANN
     * actually runs on. Vectors are unit-normalized, coarse-quantized
-    * into KMeans `cells` (as [[annIvfTrained]]), then PRODUCT-quantized:
+    * into k-means `cells` (as [[annIvfTrained]]), then PRODUCT-quantized:
     * the `dims` dimensions split into `m` contiguous subspaces, each
-    * with its own seeded KMeans(`ksub`) codebook, so a stored vector is
+    * with its own k-means(`ksub`) codebook, so a stored vector is
     * `m` small codes (4 bits each at ksub=16) instead of `dims` floats —
     * 32–64× smaller, and the candidate join shuffles (vec_id, cell,
     * code[m]) rows, NEVER raw embeddings. Queries score candidates by
@@ -789,18 +786,13 @@ object Similarity {
     def release(): Unit = index.unpersist(blocking = false)
   }
 
-  /** Fit the IVF-PQ index over `(vec_id, embedding)`: coarse KMeans
-    * into `cells`, one seeded KMeans(`ksub`) codebook per subspace
-    * slice, and the encode pass producing the stored index. The build
-    * is the expensive half ([[annIvfPq]] for the cost model); searches
-    * against the returned [[PqIndex]] are candidate-join-sized. */
   /** Fail loudly on a dims mismatch: slice() past the embedding length
     * returns EMPTY subspaces, every distance ties at 0.0 and recall
     * silently collapses. One aggregation over the whole column (NOT a
     * single arbitrary row — limit(1) would let a ragged frame pass the
     * guard and still collapse for the offending rows) buys the
-    * guarantee; PQ builds make several full scans for the KMeans fits
-    * anyway, so the extra pass is noise. ONE definition shared by
+    * guarantee; PQ builds make a full scan per Lloyd iteration anyway,
+    * so the extra pass is noise. ONE definition shared by
     * [[buildPqIndex]] and [[appendToPqIndex]]. */
   private def requireDims(vectors: DataFrame, dims: Int, what: String): Unit = {
     val span = dimSpan(vectors)
@@ -821,6 +813,13 @@ object Similarity {
     if (r.isNullAt(0)) None else Some((r.getInt(0), r.getInt(1)))
   }
 
+  /** Fit the IVF-PQ index over `(vec_id, embedding)`: coarse cells
+    * (`cells` centroids over the unit vector) and one `ksub`-centroid
+    * codebook per subspace slice, fit together in one Lloyd loop of at
+    * most `maxIter` passes, then the encode pass producing the stored
+    * index. The build is the expensive half ([[annIvfPq]] for the cost
+    * model); searches against the returned [[PqIndex]] are
+    * candidate-join-sized. `seed` seeds only the `fitFraction` draw. */
   def buildPqIndex(
       embeddings: DataFrame,
       cells: Int = 10,
@@ -838,60 +837,44 @@ object Similarity {
     // against normalized codebook centroids approximate cosine directly
     val unit = v.withColumn("u",
       transform(col("embedding"), x => x.cast("double") / sqrt(col("n2"))))
-    // memo-persist the normalized frame: the 1 + m fits and the encode
-    // transform all branch over it — without the memo each fit
-    // re-scans and re-normalizes the corpus. EAGER (r16): the fits
-    // fan out concurrently from the Par pool below, and a lazy
-    // persist lets every racing fit job recompute the interpreted
-    // higher-order normalize chain before any block lands (measured
-    // ~0.7 s CPU per racing job on q_ann_opq_search).
-    val feat = featCache.memo(unit, eager = true)
-    // every FIT (coarse + m codebooks) trains on the seeded sample;
-    // the encode/assignment pass below still sees the full frame. The
-    // filter sits over the memo-persisted feat, so the sampled fits
-    // scan the persisted normalized frame, never re-normalize.
+    // memo-persist the normalized frame: the fit and the encode
+    // transform both read it — without the memo every Lloyd pass
+    // re-scans and re-normalizes the corpus. Lazy: the fit's init
+    // collect is the first full scan and fills it.
+    val feat = featCache.memo(unit)
+    // every FIT trains on the seeded sample; the encode/assignment
+    // pass below still sees the full frame. The filter sits over the
+    // memo-persisted feat, so the sampled fit scans the persisted
+    // normalized frame, never re-normalizes.
     val fitFeat =
       fitFrame(feat, fitFraction, seed, math.max(cells, ksub), "buildPqIndex")
-    // the 1 + m fits are INDEPENDENT given fitFeat (each a fixed-seed
-    // Lloyd loop over its own slice of the persisted frame): submit
-    // them from the bounded driver pool so each fit's task tail
-    // back-fills with the next fit's tasks (guide §2.6) instead of
-    // serializing 1 + m iterative jobs. Fits are the house
-    // [[KMeansLloyd.fitCentroids]] loop (r16, replacing ml.KMeans —
-    // the r15 verdict's OPQ job-count floor): one combinable
-    // aggregation job per iteration instead of ~10 jobs per ml fit,
-    // no VectorUDT conversion on the memo, deterministic init from
-    // the k smallest vec_ids. Centroid VALUES differ from ml.KMeans's;
-    // every consumer's oracle is fit-value-independent (exhaustive
-    // probes ≡ brute force, or stash-literal replay of whatever was
-    // fit) and recall floors stay pinned in OpqSpec/AnnRecallSpec.
-    // the coarse fit and the (lockstep) codebook fit are independent
-    // given fitFeat — overlap the two from the bounded pool; the m
-    // codebook fits themselves advance in ONE aggregation job per
-    // iteration ([[KMeansLloyd.fitSubspaceCodebooks]], r16)
-    val fitted = graft.ops.Par.run[Either[
-        Array[Array[Double]], Seq[Array[Array[Double]]]]](Seq(
-      () => Left(KMeansLloyd.fitCentroids(
-        fitFeat.select(col("vec_id"), col("u").as("embedding")),
-        cells, maxIter).sortBy(_._1).map(_._2).toArray),
-      () => Right(KMeansLloyd.fitSubspaceCodebooks(
-        fitFeat, m, dsub, ksub, maxIter))))
+    // ONE Lloyd loop fits the coarse cells (the whole unit vector) and
+    // the m codebooks (its subspaces): one init collect and one pass
+    // per iteration for all 1 + m fits, each bit-identical to its own
+    // [[KMeansLloyd.kmeans]] fit ([[KMeansLloyd.fitSlices]]).
+    // Initialised from the smallest vec_ids; every consumer's oracle
+    // is fit-value-independent (exhaustive probes ≡ brute force, or
+    // stash-literal replay of whatever was fit) and recall floors stay
+    // pinned in OpqSpec/AnnRecallSpec.
+    val fits = KMeansLloyd.fitSlices(
+      fitFeat.select(col("vec_id"), col("u").as("embedding")),
+      KMeansLloyd.Slice(0, dims, cells) +:
+        (0 until m).map(j => KMeansLloyd.Slice(j * dsub, dsub, ksub)),
+      maxIter)
+    releaseFitFrame(fitFeat, fitFraction)
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val cents = fitted.head.swap.toOption.get.zipWithIndex.toSeq
+    val cents = fits.head.cents.toSeq.zipWithIndex
       .map { case (arr, i) => (i.toLong, arr, arr.map(x => x * x).sum) }
       .toDF("c_id", "c_emb", "c_n2")
-    // product codebooks: one house-Lloyd fit per subspace slice
-    val codebooks = fitted(1).toOption.get
-    releaseFitFrame(fitFeat, fitFraction)
+    val codebooks = fits.tail.map(_.cents)
     val cbLit = codebookLit(codebooks)
     val codeCol = codeColFor(cbLit, m, dsub)
     // Cell assignment via the SAME packed-argmin expression the append
     // path uses (one definition, build-time and append-time assignment
-    // cannot drift) — NOT KMeans.transform: fastSquaredDistance's
-    // norm-shortcut arithmetic is engine-private, while this argmin is
-    // a fixed-shape IEEE chain the search row's DuckDB oracle replays
-    // bit-exactly (the D15c stash-literal technique needs it).
+    // cannot drift) — a fixed-shape IEEE chain the search row's DuckDB
+    // oracle replays bit-exactly (the D15c stash-literal technique
+    // needs it).
     // the stored index: NARROW rows only — never the embedding.
     // Memo-persisted in the DEDICATED pqIdxCache: an unconditional
     // .persist() leaked one full-corpus encode per build when callers
@@ -916,8 +899,8 @@ object Similarity {
     * every pre-explosion row of a group carries the identical code, so
     * assignment costs ONE narrow shuffle and no join-back. ONE
     * definition shared by [[buildPqIndex]] and [[appendToPqIndex]] so
-    * the two cannot drift; unlike KMeans.transform it is also a
-    * fixed-shape IEEE chain the search row's oracle replays exactly.
+    * the two cannot drift; it is also a fixed-shape IEEE chain the
+    * search row's oracle replays exactly.
     * d = ||u - c||² - 1 + 2 = c_n2 - 2⟨u,c⟩ + 2 ∈ [0, 5] for unit u
     * (the +2 shift keeps the quantized pack non-negative); assignment
     * ties within 2^-39 go to the smaller c_id. */
@@ -1271,9 +1254,10 @@ object Similarity {
     * A = Σ û·yᵀ on the driver — R = V·Uᵀ. `opqRounds` rotation
     * updates from R₀ = I (fixed budget, the house determinism rule).
     *
-    * Scale shape per round: m seeded KMeans fits over subspace slices
-    * (sample-fit at 100 TB, like every quantizer here) plus ONE
-    * explode + map-side-combinable integer aggregation for A — û
+    * Scale shape per round: one Lloyd loop fitting all m subspace
+    * codebooks together ([[KMeansLloyd.fitSlices]] — one job per
+    * iteration; sample-fit at 100 TB, like every quantizer here) plus
+    * ONE explode + map-side-combinable integer aggregation for A — û
     * components quantized to 2^20 fixed point first (the E5 rule), so
     * the dims×(m·ksub) sums are exact, commutative, and
     * partition-order-independent; the fit is bit-reproducible. A
@@ -1284,7 +1268,6 @@ object Similarity {
       m: Int,
       ksub: Int,
       dims: Int,
-      seed: Long,
       maxIter: Int,
       opqRounds: Int): Array[Array[Double]] = {
     val dsub = dims / m
@@ -1300,19 +1283,13 @@ object Similarity {
       val rotated = unitFrame
         .withColumn("ru", rotateCol(rotation, col("u")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize before the fits fan out: the m concurrent fits
-      // would otherwise race the lazy persist and EACH recompute the
-      // interpreted rotate chain (same failure shape as the feat memo
-      // in buildPqIndex — one cheap count beats m rebuilds)
-      rotated.count()
-      // the m per-subspace fits advance in LOCKSTEP — one aggregation
-      // job per iteration for all of them
-      // ([[KMeansLloyd.fitSubspaceCodebooks]], r16 — see buildPqIndex's
-      // fit note; centroid values free to move off ml.KMeans's because
-      // the OPQ oracles are fit-value-independent)
-      val codebooks = KMeansLloyd.fitSubspaceCodebooks(
-        rotated.select(col("vec_id"), col("ru").as("u")),
-        m, dsub, ksub, maxIter)
+      // the m subspace codebooks in one Lloyd loop (see buildPqIndex's
+      // fit note); its init collect scans every partition and fills
+      // the persist, so no separate materializing pass is needed
+      val codebooks = KMeansLloyd.fitSlices(
+        rotated.select(col("vec_id"), col("ru").as("embedding")),
+        (0 until m).map(j => KMeansLloyd.Slice(j * dsub, dsub, ksub)),
+        maxIter).map(_.cents)
       // S[(s, c), i] = Σ_{v: code_s(v) = c} round(û_i · 2^20): one
       // chained posexplode pair (the E12 shape — no per-row struct
       // arrays) onto the m·ksub·dims key space. The CODE must be
@@ -1387,7 +1364,7 @@ object Similarity {
     // the same fitFraction, so its coarse/codebook fits sample too.
     val fitUnit =
       fitFrame(unit, fitFraction, seed, math.max(cells, ksub), "buildOpqIndex")
-    val rotation = fitOpqRotation(fitUnit, m, ksub, dims, seed, maxIter, opqRounds)
+    val rotation = fitOpqRotation(fitUnit, m, ksub, dims, maxIter, opqRounds)
     releaseFitFrame(fitUnit, fitFraction)
     val rotated = unit
       .select(col("vec_id"), rotateCol(rotation, col("u")).as("embedding"))
@@ -1900,7 +1877,7 @@ object Similarity {
     * Clustering here is the E3 deterministic coarse index (first
     * `cells` vectors as centroids, best-cell assignment by cosine) so
     * the WHOLE pipeline — assignment, pairing, keep rule — reproduces
-    * exactly in SQL; swap in [[annIvfTrained]]'s seeded-KMeans
+    * exactly in SQL; swap in [[annIvfTrained]]'s Lloyd-fitted
     * centroids (driver-side literals, same plan shape) when cluster
     * quality matters more than oracle-ability. Within a cluster the
     * pairing is EXACT (no banding), which is the paper's formulation:
@@ -2008,7 +1985,7 @@ object Similarity {
   /** The SemDeDup pipeline downstream of centroid choice — assignment
     * argmax, exact-cosine recovery, within-cell pairing, keep rule —
     * shared by [[semanticDedup]] (deterministic first-k centroids) and
-    * [[semanticDedupTrained]] (seeded-KMeans centroids), so the two
+    * [[semanticDedupTrained]] (Lloyd-fitted centroids), so the two
     * variants cannot drift. `v` is [[withNorms]] output; `cents` is
     * (c_id, c_emb, c_n2) with c_id dense in [0, 2^21-1). */
   private def semanticDedupCore(
@@ -2097,16 +2074,16 @@ object Similarity {
 
   /** D15c: SemDeDup with TRAINED centroids — [[semanticDedup]]'s exact
     * pipeline (cosine-argmax assignment, within-cell pairing, the
-    * edge-of-cluster keep rule) over seeded-KMeans cluster centers
+    * edge-of-cluster keep rule) over Lloyd-fitted cluster centers
     * instead of the first-k vectors, for corpora whose dense directions
     * first-k centroids tile badly (the D15 scaladoc's own caveat).
     * Assignment stays COSINE argmax against the fitted centers (not
-    * `model.transform`'s euclidean rule) so the trained variant shares
+    * the fit's own euclidean rule) so the trained variant shares
     * [[semanticDedupCore]] verbatim with the oracle-literal technique:
     * the fit is driver-side model state, metadata-scale by nature, and
     * lands in the plan as a broadcast frame exactly as in
     * [[annIvfTrained]]. At 100 TB: fit on a sample (`fitFraction` < 1
-    * trains the KMeans on the seeded vec_id draw — [[fitFrame]] —
+    * trains the cells on the seeded vec_id draw — [[fitFrame]] —
     * while assignment/pairing/keep still cover every vector),
     * `cells` → √N. */
   def semanticDedupTrained(
@@ -2122,33 +2099,34 @@ object Similarity {
     semanticDedupCore(v, centsFrame(embeddings.sparkSession, centRows), minCosine)
   }
 
-  /** The seeded-KMeans cell fit behind [[semanticDedupTrained]] and
-    * the D28 incremental path (one definition — frozen-state training
-    * cannot drift from the trained row). Returns the bounded model
-    * state (c_id, c_emb, c_n2) with c_n2 via the same left fold the
-    * oracle's literal gets: driver-side doubles, bit-exact both ways. */
+  /** The trained cell fit behind [[semanticDedupTrained]] and the D28
+    * incremental path (one definition — frozen-state training cannot
+    * drift from the trained row): [[KMeansLloyd.fitCentroids]] over the
+    * raw embeddings, initialised from the `cells` smallest vec_ids,
+    * with up to [[SemanticFitIters]] passes and the exact early stop;
+    * `seed` seeds only the `fitFraction` draw. Returns the bounded
+    * model state (c_id, c_emb, c_n2) with c_n2 via the same left fold
+    * the oracle's literal gets: driver-side doubles, bit-exact both
+    * ways. */
   private[graft] def fitSemanticCells(
       embeddings: DataFrame,
       cells: Int,
       seed: Long,
       fitFraction: Double,
       what: String): Seq[(Long, Array[Double], Double)] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     require(cells > 0 && cells < (1 << 21) - 1,
       s"cells must be in [1, 2^21 - 1), got $cells")
-    val v = withNorms(embeddings)
-    val feat = v.withColumn("features", array_to_vector(col("embedding")))
-    val ff = fitFrame(feat, fitFraction, seed, cells, what)
-    val model = new KMeans().setK(cells).setSeed(seed)
-      .setFeaturesCol("features").fit(ff)
+    val ff = fitFrame(embeddings.select(col("vec_id"), col("embedding")),
+      fitFraction, seed, cells, what)
+    val cents = KMeansLloyd.fitCentroids(ff, cells, SemanticFitIters)
     releaseFitFrame(ff, fitFraction)
-    model.clusterCenters.toSeq.zipWithIndex.map {
-      case (c, i) =>
-        val arr = c.toArray
-        (i.toLong, arr, arr.map(x => x * x).sum)
-    }
+    cents.map { case (i, arr) => (i, arr, arr.map(x => x * x).sum) }
   }
+
+  /** Lloyd budget of [[fitSemanticCells]]: the 20 iterations of the
+    * `ml.KMeans` default it replaced; the exact early stop ends
+    * converged fits sooner. */
+  private val SemanticFitIters = 20
 
   /** Frozen cell state as a broadcast-able (c_id, c_emb, c_n2) frame. */
   private[queries] def centsFrame(

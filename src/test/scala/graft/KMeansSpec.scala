@@ -103,4 +103,49 @@ class KMeansSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(asg == asg2, "sample-fit assignment must be partitioning-invariant")
   }
+
+  test("a ragged embedding fails naming its vec_id and both lengths") {
+    // init = vectors 0 and 1 (2 components); vector 2 has 3
+    val rows = Seq(
+      0L -> Seq(0.0f, 0.2f), 1L -> Seq(10.0f, 9.8f),
+      2L -> Seq(0.1f, 0.1f, 0.1f), 3L -> Seq(9.9f, 10.0f))
+    val e = intercept[IllegalArgumentException] {
+      KMeansLloyd.kmeans(df(rows), k = 2, iters = 2)
+    }
+    assert(e.getMessage.contains("vec_id 2 has 3 components") &&
+      e.getMessage.contains("expects 2"), e.getMessage)
+  }
+
+  test("a null element fails naming its vec_id and index") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType, false),
+      StructField("embedding", ArrayType(FloatType, true), true)))
+    val rows = Seq(
+      Row(0L, Seq(0.0f, 0.2f)), Row(1L, Seq(10.0f, 9.8f)),
+      Row(2L, Seq(0.1f, null)), Row(3L, Seq(9.9f, 10.0f)))
+    val frame = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val e = intercept[IllegalArgumentException] {
+      KMeansLloyd.kmeans(frame, k = 2, iters = 2)
+    }
+    assert(e.getMessage.contains("vec_id 2 has a null element at index 1"),
+      e.getMessage)
+  }
+
+  test("fit quantization rounds like Spark's round, negative halves included") {
+    val xs = Seq(-2.5, -1.5, -0.5, 0.5, 1.5, 2.5, 0.49999999999999994,
+      -0.49999999999999994, 4503599627370495.5, -4503599627370495.5,
+      1.0000000000000002, -3.4999999999999996, 12345.5, -12345.5, 0.0, -0.0)
+    val spark0 = xs.toDF("x").repartition(3)
+      .select(col("x"), round(col("x")).cast("long").as("r"))
+      .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
+    xs.foreach { x =>
+      assert(KMeansLloyd.roundHalfUp(x) == spark0(x), s"round($x)")
+    }
+    // a component at exactly -2.5/4096 quantizes to -3 (Math.round
+    // would give -2): the one-cell mean of it and 0 is -1.5/4096
+    val rows = Seq(0L -> Seq(-0.0006103515625f), 1L -> Seq(0.0f))
+    val out = KMeansLloyd.kmeans(df(rows), k = 1, iters = 1).collect()
+    assert(out.map(_.getDouble(3)).toSeq == Seq(-1.5 / 4096.0))
+  }
 }

@@ -46,6 +46,43 @@ class NativeExprSpec extends SparkSpec {
     assert(got == 1.0 * 0.5 + 2.0 * -1.0 + 3.0 * 2.0)
   }
 
+  test("DotProduct == HOF fold on null elements: null, as dotHof and L2Sq") {
+    import VectorFunctions._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val vec = ArrayType(FloatType, true)
+    val schema = StructType(Seq(StructField("a", vec), StructField("b", vec)))
+    val rows = Seq(
+      Row(Seq(1.0f, null, 3.0f), Seq(1.0f, 2.0f, 3.0f)),
+      Row(Seq(1.0f, 2.0f, 3.0f), Seq(null, 2.0f, 3.0f)),
+      Row(Seq(1.0f, 2.0f, 3.0f), Seq(0.5f, 2.0f, -3.0f)),
+      Row(null, Seq(1.0f)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    // the projection runs the generated code; eval() below runs nullSafeEval
+    val got = df.select(dot(col("a"), col("b")).as("native"),
+        dotHof(col("a"), col("b")).as("hof"))
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+    assert(got.forall { case (n, h) => n == h }, got)
+    assert(got.count(_._1.isEmpty) == 3, got)
+    val interp = rows.map(r => NativeExpressions.DotProduct(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(
+        Option(r.get(0)).map(_.asInstanceOf[Seq[Any]].toArray).orNull, vec),
+      org.apache.spark.sql.catalyst.expressions.Literal.create(
+        r.getSeq[Any](1).toArray, vec)).eval())
+    assert(interp.map(Option(_)) == got.map(_._1), interp)
+  }
+
+  test("DotProduct on ragged arrays folds the shared prefix (dotHof: null)") {
+    import VectorFunctions._
+    import spark.implicits._
+    val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f))).toDF("a", "b")
+    val r = df.select(dot(col("a"), col("b")), dot(col("b"), col("a")),
+      dotHof(col("a"), col("b"))).head
+    assert(r.getDouble(0) == 1.0 * 4.0 + 2.0 * 5.0)
+    assert(r.getDouble(1) == 1.0 * 4.0 + 2.0 * 5.0)
+    assert(r.isNullAt(2))
+  }
+
   test("ShingleHashes == polyHash over string shingles, elementwise") {
     val diff = Tables.documents(spark, sfDir)
       .select(

@@ -91,4 +91,60 @@ class PqIndexSpec extends SparkSpec {
     assert(codes.length == 4, s"expected m=4 codes, got ${codes.length}")
     assert(codes.forall(c => c >= 0 && c < 8), s"code out of ksub range: $codes")
   }
+
+  test("the fused fit equals kmeans alone on the unit vector and on each subspace") {
+    val (cells, m, ksub, maxIter) = (4, 4, 8, 8)
+    val idx = queries.Similarity.buildPqIndex(emb, cells = cells, m = m,
+      ksub = ksub, maxIter = maxIter)
+    // the unit vectors buildPqIndex fits on, by the same arithmetic
+    val n2 = coalesce(graft.functions.VectorFunctions.norm2(col("embedding")), lit(0.0))
+    val u = emb.select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double") / sqrt(n2)).as("u"))
+    def alone(vec: org.apache.spark.sql.Column, k: Int): Seq[Seq[Double]] =
+      queries.KMeansLloyd.kmeans(u.select(col("vec_id"), vec.as("embedding")),
+          k = k, iters = maxIter)
+        .collect().toSeq.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+        .map(_._2.sortBy(_.getLong(1)).map(_.getDouble(3)))
+    val coarse = idx.cents.orderBy("c_id").collect().toSeq
+      .map(_.getSeq[Double](1).toSeq)
+    assert(coarse == alone(col("u"), cells), "coarse centroids")
+    val dsub = 64 / m
+    (0 until m).foreach { j =>
+      assert(idx.codebooks(j).toSeq.map(_.toSeq) ==
+        alone(slice(col("u"), j * dsub + 1, dsub), ksub), s"codebook $j")
+    }
+    idx.release()
+  }
+
+  test("a PQ build's fit runs one init job plus one job per iteration, whatever m") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // the fit describes its jobs "kmeans fit: ..."; the description is
+    // a job property, so jobs AQE submits from its own threads carry it
+    val fitJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("kmeans fit")))
+          fitJobs.incrementAndGet()
+    }
+    def jobsFor(m: Int): Int = {
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      fitJobs.set(0)
+      val idx = queries.Similarity.buildPqIndex(emb, cells = 10, m = m,
+        ksub = 16, maxIter = 4)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      idx.release()
+      fitJobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (m2, m8) = (jobsFor(2), jobsFor(8))
+      info(s"fit jobs: m = 2 -> $m2, m = 8 -> $m8")
+      assert(m2 >= 2, s"the listener saw no fit jobs: $m2")
+      assert(m2 <= 1 + 4, s"m = 2 fit ran $m2 jobs")
+      assert(m8 == m2, s"m = 8 fit ran $m8 jobs, m = 2 ran $m2")
+    } finally sc.removeSparkListener(listener)
+  }
 }
