@@ -57,16 +57,16 @@ object Dedup {
   private[this] val cachedShingles = new graft.ops.PlanCache(capacity = 4)
 
   /** Memo of the K-wide signature frame (r16, guide §5): every MinHash
-    * consumer fans the sig frame into 3–5 plan branches (band keys,
-    * band-side __known join, the a/b rescore sides), and WITHOUT a
-    * persist each branch re-runs the 16-permutation minhashSigs map
-    * from the shingle memo — measured 10+ s of repeated CPU per call
-    * on q_dedup_incremental_minhash at sf0.1 (three broadcast builds
-    * at 4.6/4.0/1.9 s CPU each recomputing signatures). The frame is
-    * narrow (doc_id + 16 longs), so the persist is cheap relative to
-    * the map it deduplicates. Capacity 4: full corpus + incoming +
-    * known slices of one corpus, plus one spare for interleaved
-    * workloads. */
+    * consumer reads the sig frame on both sides of its band join
+    * ([[minhashBandPairs]]), and WITHOUT a persist each side re-runs
+    * the 16-permutation minhashSigs map from the shingle memo (measured
+    * in r16: 10+ s of repeated CPU per call on
+    * q_dedup_incremental_minhash at sf0.1, when the plan read the frame
+    * from three to five branches). The frame is narrow (doc_id + 16
+    * longs), so the persist is cheap
+    * relative to the map it deduplicates. Capacity 4: full corpus +
+    * incoming + known slices of one corpus, plus one spare for
+    * interleaved workloads. */
   private[this] val sigCache = new graft.ops.PlanCache(capacity = 4)
 
   /** Memo for [[jaccardPairsPrefix]]'s ranked-prefix frame and
@@ -312,13 +312,17 @@ object Dedup {
     * (same against an EARLIER — smaller doc_id — batch doc, G5's
     * registry orientation), `keep` = neither.
     *
-    * The incremental shape, not a full-corpus D2 rerun: candidate
-    * generation joins ONLY incoming-side band keys against the union
-    * frame, restricted to partners that are known or earlier — the
-    * lake never pairs with itself, so nightly cost scales with the
-    * batch (x lake bucket density), not the lake. Doc ids must be
-    * disjoint across the two frames and later batches get larger ids
-    * (the D13 ingest contract). In production the lake side's
+    * The incremental shape, not a full-corpus D2 rerun: ONE band join
+    * ([[minhashBandPairs]]) probes with incoming-side band rows only,
+    * against the union's band rows restricted to partners that are
+    * known or earlier, and scores signature agreement on the joined
+    * row (each band row carries its signature) — so the lake is read
+    * once for its band rows, never joined back by doc_id, and never
+    * pairs with itself; nightly cost scales with the batch (x lake
+    * bucket density), not the lake. A per-doc max over the surviving
+    * pairs gives the flags. Doc ids must be disjoint across the two
+    * frames and later batches get larger ids (the D13 ingest
+    * contract). In production the lake side's
     * signature/band frames are stored precomputed (the same "store the
     * 24-byte keys, never rescan text" note as D13); deriving them from
     * text here keeps the row oracle-checkable end-to-end.
@@ -346,33 +350,21 @@ object Dedup {
     val sigs = minhashSigFrame(incoming.select(col("doc_id"), col("text")))
       .withColumn("__known", lit(false))
       .unionByName(knownSigs.withColumn("__known", lit(true)))
-    val bands = minhashBandFrame(sigs.drop("__known"))
-      .join(sigs.select(col("doc_id"), col("__known")), "doc_id")
-    val cand = bands.filter(!col("__known")).as("x").join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_hash") === col("y.band_hash") &&
-          (col("y.__known") || col("y.doc_id") < col("x.doc_id")))
-      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("pid"),
-        col("y.__known").as("pknown"))
-      .distinct()
-    val sigsOnly = sigs.drop("__known")
-    val a = sigsOnly.toDF(sigsOnly.columns.map("a_" + _): _*)
-    val b = sigsOnly.toDF(sigsOnly.columns.map("b_" + _): _*)
-    val agree = (0 until MinhashK)
-      .map(i => when(col(s"a_s$i") === col(s"b_s$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    val flags = cand
-      .join(a, col("doc_id") === col("a_doc_id"))
-      .join(b, col("pid") === col("b_doc_id"))
-      .filter(agree.cast("double") / MinhashK >= 0.5)
+    // probe with incoming band rows only, against partners that are
+    // known or earlier; a partner sharing several bands rescores to the
+    // same est_jaccard on each, which the max below absorbs
+    val flags = minhashBandPairs(sigs,
+        !col("x.__known") &&
+          (col("y.__known") || col("y.doc_id") < col("x.doc_id")),
+        col("x.doc_id").as("doc_id"), col("y.__known").as("pknown"))
       .groupBy("doc_id")
       .agg(max(when(col("pknown"), 1).otherwise(0)).as("nk"),
         max(when(!col("pknown"), 1).otherwise(0)).as("nb"))
     // The id-disjointness contract is ENFORCED, not just documented
     // (the exciseSpans domain-guard pattern): an overlapping doc_id
-    // would put two texts under one id in the union, silently
-    // multiplying the band join and the signature rescore across
-    // mismatched (doc_id, text) pairs — and re-crawl ingest, this
+    // would put two signatures under one id in the union, silently
+    // pairing an incoming doc with its own id's other text and
+    // corrupting the flags — and re-crawl ingest, this
     // operator's own motivating use case, plausibly reuses ids. The
     // check is an ids-only join + 1-row count (metadata-cheap), and
     // the assert folds into EVERY flag column via coalesce, so any
@@ -474,8 +466,10 @@ object Dedup {
     *
     * Plan shape (the 100 TB path): docs → shingle-hash arrays (map-only) →
     * K min-hash signatures (map-only) → explode to `MinhashBands` band
-    * keys → shuffle ONCE on band key (the LSH bucket join) → distinct
-    * candidate pairs → signature-agreement filter. Candidate volume is
+    * rows, each carrying the doc's signature → shuffle ONCE on band key
+    * (the LSH bucket join), scoring signature agreement on the joined
+    * row → est-Jaccard filter → distinct pairs. No join on doc_id: the
+    * band row already holds what the rescore reads. Candidate volume is
     * ~linear in corpus size for any fixed near-dup density, vs the
     * quadratic all-pairs join it replaces. */
   /** (doc_id, s0..s{k-1}) MinHash signature frame — the per-doc map
@@ -489,12 +483,6 @@ object Dedup {
   def minhashSignatures(docs: DataFrame): DataFrame =
     minhashSigFrame(docs.select(col("doc_id"), col("text")))
 
-  /** [[minhashSignatures]] without the memo, for a frame signed once:
-    * a micro-batch's checkpointed survivors, whose memo would pin
-    * blocks derived from a checkpoint freed after the batch. */
-  private[graft] def minhashSignaturesOnce(docs: DataFrame): DataFrame =
-    minhashSigPlan(shinglePlan(docs.select(col("doc_id"), col("text"))))
-
   // eager: the first action over a minhash query fans this frame into
   // sibling broadcast builds, which race a lazy persist and each
   // recompute the 16-permutation map (measured: 3 builds at
@@ -504,51 +492,51 @@ object Dedup {
     sigCache.memo(minhashSigPlan(hashedShingles(docs)), eager = true)
 
   /** (doc_id, s0..) from a (doc_id, hs) shingle-hash frame. */
-  private def minhashSigPlan(shingles: DataFrame): DataFrame = {
-    val sigCols = (0 until MinhashK).map { i =>
-      element_at(col("sigv"), i + 1).as(s"s$i")
-    }
+  private def minhashSigPlan(shingles: DataFrame): DataFrame =
     shingles
-      .select(col("doc_id"),
-        graft.functions.NativeExpressions.minhashSigs(col("hs"), MinhashK).as("sigv"))
-      .select(col("doc_id") +: sigCols: _*)
-  }
+      .select(col("doc_id"), minhashSigCol(col("hs")).as("sigv"))
+      .select(col("doc_id") +: sigSlotCols(col("sigv")): _*)
 
-  /** Signature frame -> (doc_id, band_idx, band_hash) LSH bucket keys. */
-  private def minhashBandFrame(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until MinhashBands).map { b =>
-      struct(lit(b).as("band_idx"),
-        (col(s"s${2 * b}") * P + col(s"s${2 * b + 1}")).as("band_hash"))
-    }
-    sigs
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bd"))
-      .select(col("doc_id"), col("bd.band_idx"), col("bd.band_hash"))
+  /** A [[MinhashK]]-wide signature array as the stored s0..s{k-1}
+    * columns (each null when the array is). */
+  private[graft] def sigSlotCols(sig: Column): Seq[Column] =
+    (0 until MinhashK).map(i => element_at(sig, i + 1).as(s"s$i"))
+
+  /** The banded-MinHash pair join, rescored on the joined row: each
+    * band row carries its doc's whole signature (s0..s{k-1}, plus any
+    * other column of `sigs`), so the self-join on (band_idx, band_hash)
+    * counts agreeing slots in place and never joins back to the
+    * signature frame by doc_id — the [[hammingBandedPairs]] shape.
+    * `pair` is the join residual over the aliases `x`/`y` (a conjunct
+    * on `x` alone is pushed below the join, restricting the probe
+    * side), and `out` picks the output columns beside `est_jaccard`.
+    * Only pairs at est_jaccard >= 0.5 (D2's threshold) survive, once
+    * per band they share: callers dedupe. */
+  private def minhashBandPairs(
+      sigs: DataFrame, pair: Column, out: Column*): DataFrame = {
+    val bands = sigs.select(col("*"),
+      posexplode(array((0 until MinhashBands).map { b =>
+        col(s"s${2 * b}") * P + col(s"s${2 * b + 1}")
+      }: _*)).as(Seq("band_idx", "band_hash")))
+    val agree = (0 until MinhashK)
+      .map(i => when(col(s"x.s$i") === col(s"y.s$i"), 1).otherwise(0))
+      .reduce(_ + _)
+    bands.as("x").join(bands.as("y"),
+        col("x.band_idx") === col("y.band_idx") &&
+          col("x.band_hash") === col("y.band_hash") && pair)
+      .select(out :+ (agree.cast("double") / MinhashK).as("est_jaccard"): _*)
+      .filter(col("est_jaccard") >= 0.5)
   }
 
   /** Public API: MinHash+LSH near-dup pairs over any (doc_id, text)
     * frame. */
-  def minhashPairs(docs: DataFrame): DataFrame = {
-      val sigs = minhashSigFrame(docs)
-      val bands = minhashBandFrame(sigs)
-      val cand = bands.as("x").join(bands.as("y"),
-          col("x.band_idx") === col("y.band_idx") &&
-            col("x.band_hash") === col("y.band_hash") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .distinct()
-      val a = sigs.toDF(sigs.columns.map("a_" + _): _*)
-      val b = sigs.toDF(sigs.columns.map("b_" + _): _*)
-      val agree = (0 until MinhashK)
-        .map(i => when(col(s"a_s$i") === col(s"b_s$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      cand
-        .join(a, col("id_a") === col("a_doc_id"))
-        .join(b, col("id_b") === col("b_doc_id"))
-        .select(col("id_a"), col("id_b"),
-          (agree.cast("double") / MinhashK).as("est_jaccard"))
-        .filter(col("est_jaccard") >= 0.5)
-        .orderBy("id_a", "id_b")
-  }
+  def minhashPairs(docs: DataFrame): DataFrame =
+    // est_jaccard is a function of the pair, so the distinct leaves one
+    // row per pair however many bands it shares
+    minhashBandPairs(minhashSigFrame(docs), col("x.doc_id") < col("y.doc_id"),
+        col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+      .distinct()
+      .orderBy("id_a", "id_b")
 
   val qDedupMinhash: Q = Q(
     "q_dedup_minhash",

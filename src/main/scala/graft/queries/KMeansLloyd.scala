@@ -311,7 +311,7 @@ object KMeansLloyd {
     * event-log job description; listeners read it from the job
     * properties, which AQE's stage threads inherit), then restore the
     * caller's description. */
-  private def described[A](v: DataFrame, what: String)(body: => A): A = {
+  private[queries] def described[A](v: DataFrame, what: String)(body: => A): A = {
     val sc = v.sparkSession.sparkContext
     val key = "spark.job.description"
     val prev = sc.getLocalProperty(key)

@@ -793,9 +793,12 @@ object Similarity {
     * guard and still collapse for the offending rows) buys the
     * guarantee; PQ builds make a full scan per Lloyd iteration anyway,
     * so the extra pass is noise. ONE definition shared by
-    * [[buildPqIndex]] and [[appendToPqIndex]]. */
+    * [[buildPqIndex]], [[buildOpqIndex]] and [[appendToPqIndex]]; its
+    * jobs carry the description `requireDims: <what>`. */
   private def requireDims(vectors: DataFrame, dims: Int, what: String): Unit = {
-    val span = dimSpan(vectors)
+    val span = KMeansLloyd.described(vectors, s"requireDims: $what") {
+      dimSpan(vectors)
+    }
     require(span.isDefined, s"$what: embeddings frame is empty")
     val (dmin, dmax) = span.get
     require(dmin == dims && dmax == dims,
@@ -831,6 +834,16 @@ object Similarity {
       fitFraction: Double = 1.0): PqIndex = {
     require(dims % m == 0, s"dims=$dims must split evenly into m=$m subspaces")
     requireDims(embeddings, dims, "buildPqIndex")
+    fitPqIndex(embeddings, cells, m, ksub, dims, seed, maxIter, fitFraction)
+  }
+
+  /** [[buildPqIndex]] past its input checks, for a frame already known
+    * to be `dims` wide: [[buildOpqIndex]]'s rotated frame, whose width
+    * is `dims` by construction, so its one [[requireDims]] scan is the
+    * one on the caller's input. */
+  private def fitPqIndex(
+      embeddings: DataFrame, cells: Int, m: Int, ksub: Int, dims: Int,
+      seed: Long, maxIter: Int, fitFraction: Double): PqIndex = {
     val dsub = dims / m
     val v = withNorms(embeddings)
     // unit-normalize once: cos(q, x) = <q̂, x̂>, so inner products
@@ -1336,10 +1349,10 @@ object Similarity {
   }
 
   /** Fit an OPQ index: learn the rotation ([[fitOpqRotation]]), rotate
-    * the unit vectors once, and run the standard [[buildPqIndex]] over
-    * the rotated frame — coarse cells, codebooks, and the stored code
-    * index all live in rotated space; the rotation is the only extra
-    * model state. */
+    * the unit vectors once, and run the standard PQ fit
+    * ([[fitPqIndex]]) over the rotated frame — coarse cells, codebooks,
+    * and the stored code index all live in rotated space; the rotation
+    * is the only extra model state. */
   def buildOpqIndex(
       embeddings: DataFrame,
       cells: Int = 10,
@@ -1360,7 +1373,7 @@ object Similarity {
     // (opqRounds × (m fits + the A aggregation), each over a persisted
     // ROTATED copy of its input) — trains on the seeded sample; the
     // one-time rotate of the full corpus and the PQ build's encode
-    // pass below still see every vector. The inner buildPqIndex gets
+    // pass below still see every vector. The inner fitPqIndex gets
     // the same fitFraction, so its coarse/codebook fits sample too.
     val fitUnit =
       fitFrame(unit, fitFraction, seed, math.max(cells, ksub), "buildOpqIndex")
@@ -1369,7 +1382,7 @@ object Similarity {
     val rotated = unit
       .select(col("vec_id"), rotateCol(rotation, col("u")).as("embedding"))
     OpqIndex(rotation,
-      buildPqIndex(rotated, cells, m, ksub, dims, seed, maxIter, fitFraction))
+      fitPqIndex(rotated, cells, m, ksub, dims, seed, maxIter, fitFraction))
   }
 
   /** ADC search of a fitted [[OpqIndex]]: queries rotate into index

@@ -137,13 +137,10 @@ object Sinks {
     * never rescan text" artifact both incremental dedup flows read:
     * `dedupIncremental` takes the (k1, k2) columns, and
     * `dedupIncrementalMinhash` the (doc_id, s0..) columns, directly. */
-  def signatureFrame(docs: DataFrame): DataFrame =
-    withContentKeys(docs, graft.queries.Dedup.minhashSignatures(docs))
-
-  private def withContentKeys(docs: DataFrame, sigs: DataFrame): DataFrame = {
+  def signatureFrame(docs: DataFrame): DataFrame = {
     val (k1, k2) = graft.queries.Dedup.contentKeyCols(col("text"))
     docs.select(col("doc_id"), k1.as("k1"), k2.as("k2"))
-      .join(sigs, Seq("doc_id"), "left")
+      .join(graft.queries.Dedup.minhashSignatures(docs), Seq("doc_id"), "left")
   }
 
   /** Append one ingest batch's signature rows to the signature store
@@ -157,12 +154,25 @@ object Sinks {
   def appendSignatures(docs: DataFrame, dir: String): Unit =
     signatureFrame(docs).write.mode(SaveMode.Append).parquet(dir)
 
-  /** [[appendSignatures]] for one micro-batch's checkpointed survivors:
-    * their signatures skip [[graft.queries.Dedup]]'s memo (see
-    * `Dedup.minhashSignaturesOnce`). */
-  private[graft] def appendBatchSignatures(docs: DataFrame, dir: String): Unit =
-    withContentKeys(docs, graft.queries.Dedup.minhashSignaturesOnce(docs))
+  /** [[appendSignatures]] for one micro-batch's checkpointed
+    * survivors: keys and signature come from ONE projection over the
+    * checkpoint, so the append is a single write job with no exchange,
+    * and it skips [[graft.queries.Dedup]]'s memo, which would pin
+    * blocks derived from a checkpoint freed after the batch. The rows
+    * equal [[signatureFrame]]'s: a doc with no 3-shingle keeps its keys
+    * and carries null s0..s{k-1}. */
+  private[graft] def appendBatchSignatures(docs: DataFrame, dir: String): Unit = {
+    import graft.queries.Dedup
+    val (k1, k2) = Dedup.contentKeyCols(col("text"))
+    docs
+      .select(col("doc_id"), k1.as("k1"), k2.as("k2"),
+        Dedup.shingleHashCol(col("text")).as("__hs"))
+      .select(col("doc_id"), col("k1"), col("k2"),
+        when(size(col("__hs")) > 0, Dedup.minhashSigCol(col("__hs"))).as("__sig"))
+      .select(Seq(col("doc_id"), col("k1"), col("k2")) ++
+        Dedup.sigSlotCols(col("__sig")): _*)
       .write.mode(SaveMode.Append).parquet(dir)
+  }
 
   /** Append one batch's GRAM-KEY rows to the span-dedup key store at
     * `dir` — the D27 lake artifact: per distinct word-n-gram md5, the

@@ -1081,15 +1081,17 @@ object Streams {
     *
     * Scale shape: the store holds ~150 bytes/doc (D1 keys + MinHash
     * signature — never text), appended as new parquet files per batch
-    * and re-read per batch as a columnar scan of key columns only.
-    * Per-batch cost is NOT yet proportional to the batch: every
-    * reference to `known` in the decision's plan re-reads the whole
-    * store, so per-batch cost grows with the lake.
+    * as one projection over the survivors (no exchange), and re-read
+    * per batch as a columnar scan of key columns only. The decision's
+    * plan reads the store twice: once for the signatures the band join
+    * probes, once for the id-disjointness guard. Per-batch cost is NOT
+    * yet proportional to the batch: both reads scan the whole store, so
+    * per-batch cost grows with the lake.
     *
     * Exactly-once: on batch replay after a failure the append can
     * double-write a survivor's signature row — duplicate signature
-    * ROWS only widen the candidate set (same flags — the rescore
-    * dedups by partner id via max), they never change `keep`, so the
+    * ROWS only repeat band-join matches (same flags — the per-doc max
+    * absorbs repeats), they never change `keep`, so the
     * store is effectively idempotent for dedup purposes; compact it
     * periodically ([[graft.sources.Sinks.compactParquet]]). */
   def ingestStreamAppend(
@@ -1177,7 +1179,14 @@ object Streams {
       .start()
 
   /** One micro-batch of [[ingestStream]] as a batch plan — shared by
-    * the stream wrapper and the spec differential. */
+    * the stream wrapper and the spec differential. Decontamination
+    * runs on the gated batch and the dedup survivors are semi-joined
+    * after it: contamination is a per-doc property and `doc_id` is
+    * unique within a batch (the contract [[gopherGates]] relies on),
+    * so the rows equal gating → dedup → decontamination, while the
+    * dedup plan — and with it the lake — appears once in the plan
+    * rather than under both of [[graft.queries.Contamination
+    * .decontamGate]]'s reads of its input. */
   private[graft] def ingestBatch(
       batch: DataFrame,
       known: DataFrame,
@@ -1189,8 +1198,8 @@ object Streams {
     val keep = Dedup.dedupIncrementalMinhash(gated, known)
       .filter(col("keep") === 1L)
       .select("doc_id")
-    Contamination.decontamGate(
-      gated.join(keep, Seq("doc_id"), "left_semi"), evalDocs)
+    Contamination.decontamGate(gated, evalDocs)
+      .join(keep, Seq("doc_id"), "left_semi")
   }
 
   /** The C16 ∧ C17 ingest gates as ONE map stage: the retain forms

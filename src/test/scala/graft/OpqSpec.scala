@@ -129,4 +129,37 @@ class OpqSpec extends SparkSpec {
     assert(opqR >= 0.3, s"OPQ recall collapsed: $opqR")
     assert(opqR >= pqR - 0.15, s"OPQ recall $opqR far below PQ $pqR")
   }
+
+  test("an OPQ build checks embedding widths with one scan, on its input") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // requireDims describes its jobs "requireDims: <caller>"
+    val checks = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("requireDims"))
+          .foreach(checks.add)
+    }
+    def checkJobs(build: => Unit): Seq[String] = {
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      checks.clear()
+      build
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      graft.ops.Release.sweep(spark)
+      checks.toArray(Array.empty[String]).toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the jobs of one scan: a direct PQ build checks its input once
+      val one = checkJobs(Similarity.buildPqIndex(emb, cells = 4, m = 4,
+        ksub = 8, maxIter = 2).release())
+      assert(one.nonEmpty && one.forall(_ == "requireDims: buildPqIndex"), one)
+      val opq = checkJobs(Similarity.buildOpqIndex(emb, cells = 4, m = 4,
+        ksub = 8, maxIter = 2, opqRounds = 1).pq.release())
+      assert(opq == one.map(_ => "requireDims: buildOpqIndex"),
+        s"OPQ build's width checks $opq, one scan is ${one.size} jobs")
+    } finally sc.removeSparkListener(listener)
+  }
 }

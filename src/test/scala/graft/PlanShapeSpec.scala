@@ -124,4 +124,50 @@ class PlanShapeSpec extends SparkSpec {
     val joins = "Join".r.findAllIn(p).size
     assert(joins <= 2, s"one purchase-click join expected, got $joins join nodes")
   }
+
+  test("an ingest micro-batch decision reads the signature lake at most twice") {
+    import spark.implicits._
+    graft.ops.Release.sweep(spark)
+    val stops = Seq("the", "a", "of", "and", "to", "in", "is")
+    def good(t: String) = Seq(
+      s"the cat ${t}aa big house", s"and dog ${t}bb warm garden",
+      s"of bird ${t}cc tall market", s"to fish ${t}dd wide basket",
+      s"a goat ${t}ee ripe apple", s"in lamb ${t}ff sweet pear",
+      s"is wolf ${t}gg fresh plum").mkString(" ")
+    val lakeDir = java.nio.file.Files.createTempDirectory("graft-plan-lake")
+      .resolve("sigs").toString
+    graft.sources.Sinks.appendSignatures(
+      Seq((100L, good("lke"))).toDF("doc_id", "text"), lakeDir)
+    val batch = Seq((1L, good("one")), (2L, good("lke")), (3L, "tiny doc"))
+      .toDF("doc_id", "text")
+    // the known side exactly as ingestStreamAppend builds it
+    val known = graft.sources.Sinks.readSignatures(spark, lakeDir)
+      .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
+    val eval = Seq((200L, good("evl"))).toDF("doc_id", "text")
+    val sp = graft.streaming.Streams.ingestBatch(batch, known, eval, 10L, stops)
+      .queryExecution.sparkPlan
+    val lakeName = new java.io.File(lakeDir).getName
+    val lakeScans = sp.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == lakeName) => s
+    }.size
+    info(s"$lakeScans lake scans in one decision")
+    // one read for the band join's signatures, one for the id guard
+    assert(lakeScans >= 1 && lakeScans <= 2,
+      s"$lakeScans lake scans in one decision:\n${sp.toString.take(3000)}")
+    graft.ops.Release.sweep(spark)
+  }
+
+  test("q_dedup_minhash rescores on the band join: no join keyed on doc_id") {
+    graft.ops.Release.sweep(spark)
+    val sp = SparkEntry.queries("q_dedup_minhash")(spark, sfDir).queryExecution.sparkPlan
+    val keys = sp.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+        (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+    }
+    assert(keys.nonEmpty, s"no join in the plan:\n${sp.toString.take(3000)}")
+    assert(keys.flatten.forall(!_.endsWith("doc_id")),
+      s"join keys $keys:\n${sp.toString.take(3000)}")
+    graft.ops.Release.sweep(spark)
+  }
 }

@@ -102,4 +102,34 @@ class SourcesSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(o_totalprice)"), plan.take(500))
   }
+
+  test("appendBatchSignatures writes signatureFrame's rows in one job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight"),
+      (2L, "harbor cranes lift steel containers onto waiting vessels"),
+      (3L, "tiny doc")) // no 3-shingle: keys only, null signature
+      .toDF("doc_id", "text").localCheckpoint()
+    val dir = s"${tmpDir("batch-sigs")}/sigs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      Sinks.appendBatchSignatures(docs, dir)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${jobs.get} jobs for one batch append")
+    val want = Sinks.signatureFrame(docs)
+    val got = spark.read.parquet(dir)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    val rows = got.orderBy("doc_id").collect().toSeq
+    assert(rows == want.orderBy("doc_id").collect().toSeq, rows)
+    assert(rows.size == 3 && rows(2).isNullAt(3) && !rows(2).isNullAt(1), rows)
+  }
 }
