@@ -42,10 +42,8 @@ object Bench {
       // pages) coalesce to ONE task and serialize at 1/cores capacity
       // (measured: q_extract_clean 2.6 s -> 1.2 s at 64k). At
       // production scale stage bytes dwarf any floor and the setting
-      // is inert; env-overridable so it stays a parameter, not a
-      // constant tuned to this box.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      // is inert.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // noop sink: forces EVERY output column to be computed — count()

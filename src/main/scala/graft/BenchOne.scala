@@ -68,8 +68,7 @@ object BenchOne {
       .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    builder.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+    builder.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val metrics = new Metrics

@@ -48,7 +48,7 @@ object Plans {
     "q_dsir_weights" -> "feature explode -> two hash aggs, 4096-row ln-ratio model broadcast back, integer-sum weights, top-k via limits + broadcast semi-join (no global window)",
     "q_dedup_incremental" -> "known side collapses to distinct 24-byte key pairs; incoming pays one narrow window + one key join — text never shuffles",
     "q_quality_deciles" -> "bounded fixed-point histogram agg -> cumulative window over histogram ROWS only -> 1-row threshold broadcast -> shuffle-free comparison map over the memoized scored frame; no percentile_disc state, no corpus-sized single partition anywhere",
-    "q_dup_spans" -> "memoized (doc, pos, md5) frame read by both branches; duplicated-key count agg + key-equi paint join (no text), per-doc window merges by interval-overlap gap rule — 128-bit keys because a narrow candidate hash birthday-manufactures phantom spans (ScaleProbe-caught)",
+    "q_dup_spans" -> "memoized (doc, pos, md5) frame read by both branches; duplicated-key count agg + key-equi paint join (no text), per-doc window merges by interval-overlap gap rule — 128-bit keys because a narrow candidate hash birthday-manufactures phantom spans (ExciseSpansSpec plants such a collision)",
     "q_weighted_sample" -> "pure map stage (scramble, quantized ln, one divide) + TakeOrderedAndProject; no shuffle at all",
     "q_dedup_semantic" -> "SemDeDup: cell-keyed within-cluster candidate join (never all-pairs), centroid distances as a narrow broadcast, keep-rule window on fixed-width keys",
     "q_pack_sequences_bpe" -> "BPE-weighted packing: distinct-word encoder map (rank table broadcast) -> word-keyed fertility join + per-doc agg -> left join restores wordless docs -> H8 distributed prefix sum; corpus text never shuffles",

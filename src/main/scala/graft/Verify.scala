@@ -21,8 +21,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // see Bench: keeps AQE from serializing CPU-dense tiny-byte stages
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

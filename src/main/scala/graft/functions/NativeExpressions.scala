@@ -51,8 +51,8 @@ object NativeExpressions {
     * JDK, so values are stable everywhere and get embedded as literals
     * in the DuckDB oracle SQL).
     *
-    * Two failure modes were hit before landing here, both discovered by
-    * the 200k-doc scale probe, both invisible at 5k docs:
+    * Two failure modes were hit before landing here, both found by a
+    * 200k-doc scale run, both invisible on the 5k-doc test corpus:
     *  - tiny multipliers (a = 2i+3): (a·h+b) mod P is near-order-
     *    preserving, so all k "permutations" pick ~the same min;
     *  - arithmetic-progression multipliers (a_i = c·(i+1)+d): any pool
@@ -60,7 +60,9 @@ object NativeExpressions {
     *    under every permutation — ~1000 such "resonant" shingles per
     *    125k-shingle corpus, and every doc containing one collides with
     *    every other such doc in most bands (46k false pairs at 500k
-    *    docs, est_jaccard 0.6 on true jaccard 0.01). */
+    *    docs, est_jaccard 0.6 on true jaccard 0.01).
+    * NativeExprSpec bounds the mean estimate error on seeded low-overlap
+    * pairs, a case the tiny multipliers fail. */
   private lazy val minhashCoefs: (Array[Long], Array[Long]) = {
     val rnd = new java.util.SplittableRandom(0x67726166L) // "graf"
     def draw(): Long = { var v = 0L; while (v == 0L) v = rnd.nextLong(1L, P); v }

@@ -43,9 +43,9 @@ object ConnectedComponents {
       localFinishEdges)._1
 
   /** [[connectedComponents]] plus the number of large-star/small-star
-    * rounds it took — the probe-facing variant ([[graft.ScaleProbe]]
-    * asserts the O(log n) regime on a worst-case chain; the probe
-    * passes `localFinishEdges = 0` to exercise the iteration).
+    * rounds it took (ConnectedComponentsSpec asserts the O(log n)
+    * round budget on a worst-case chain, passing `localFinishEdges = 0`
+    * to exercise the iteration).
     *
     * Returns round = -1 when the graph resolved through the driver-side
     * local finish (edge count ≤ `localFinishEdges`), so a caller using

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * docs are short).
   *
   * Matching is on the EXACT shingle string, not a hash of it. The
-  * first cut joined 1e9+7-space poly hashes and the ScaleProbe caught
-  * it: at 505k docs (27M train shingles × 53k eval shingles) the
+  * first cut joined 1e9+7-space poly hashes: at 505k docs (27M train
+  * shingles × 53k eval shingles) the
   * birthday bound already manufactures ~1.4k phantom matches — ~1.4×
   * the real contamination — and at corpus scale a 30-bit key flags
   * everything. A contamination FLAG must not have hash false
@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * because the eval side broadcasts (below); if a benchmark set ever
   * outgrows broadcast, swap the join key for md5(shingle) — 128 bits
   * keeps the collision expectation at zero for any physical corpus —
-  * never a narrow hash.
+  * never a narrow hash. BloomDecontamSpec plants two distinct 8-grams
+  * with equal poly hashes and asserts neither flags.
   *
   * Scale shape: both sides reduce to DISTINCT per-doc shingle sets
   * (one native-tokenizer pass per doc). The eval set is

@@ -928,7 +928,7 @@ object Dedup {
     * the running-max interval end reduces to `lag(p) + n - 1` — a
     * plain per-doc lag, no running-max window needed.
     *
-    * Key-width lesson (caught by the 1M-doc ScaleProbe, round 7): the
+    * Key-width lesson (caught by a 1M-doc scale run, round 7): the
     * first cut keyed grams on the mod-1e9+7 poly hash — fine for
     * CANDIDATE generation (D2/D4 rescore exactly afterwards), fatal
     * for a FINAL decision: ~26M grams birthday-collide into ~340k
@@ -936,7 +936,8 @@ object Dedup {
     * rows, measured), and there is no cheap rescore for spans. Grams
     * therefore key on their md5 (128-bit — the D1 fingerprint
     * pattern): collision-free in practice at any corpus size, and the
-    * oracle reproduces it exactly.
+    * oracle reproduces it exactly. ExciseSpansSpec plants two distinct
+    * 5-grams with equal poly hashes and asserts neither is a span.
     *
     * Scale shape: one tokenize+shingle+md5 map pass, the (doc, pos,
     * md5) frame memo-persisted and read by both branches;

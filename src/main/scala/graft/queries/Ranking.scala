@@ -539,8 +539,8 @@ object Ranking {
     * anywhere in the bucket build, the (t, bucket) join, or the
     * candidate-restricted rescore breaks the hash (the E7/E3b
     * losslessness pattern). Production-shape recall (real bits at
-    * d = 2^16) is gated by RankingSpec + the ScaleProbe planted-twin
-    * census. */
+    * d = 2^16) is gated by RankingSpec ("hybridSearchLsh: exhaustive
+    * buckets equal the dense form; real buckets keep the twin"). */
   val qHybridSearchLsh: Q = Q(
     "q_hybrid_search_lsh",
     (s, d) => hybridSearchLsh(Tables.documents(s, d), tables = 2, bits = 0),

@@ -47,8 +47,9 @@ object Similarity {
     * run on the full frame. Search-side losslessness is untouched by
     * construction: the exhaustive-config oracle rows are fit-blind
     * (q_ann_ivf_trained_exh runs at fitFraction = 0.5 to pin exactly
-    * that), and sample-fit recall is gated in SampleFitSpec + the
-    * ScaleProbe sample-fit census. When the draw leaves fewer rows
+    * that), and sample-fit recall is gated in SampleFitSpec
+    * ("production probes: sample-fit recall@5 stays within eps of the
+    * full fit"). When the draw leaves fewer rows
     * than the fit needs (`minRows` — the largest k it trains), the
     * guard fails loudly: a Lloyd fit on fewer vectors than cells
     * silently returns fewer centroids than asked for, the failure
@@ -617,7 +618,7 @@ object Similarity {
     * SQL brute force even though the iterative fit itself is not
     * SQL-expressible. Probe-limited recall (the production setting)
     * stays spec-gated: AnnRecallSpec (full fit), SampleFitSpec
-    * (sample fit) + the 1M-vector ScaleProbe.
+    * (sample fit).
     *
     * Runs at `fitFraction = 0.5`, so the driver gate ALSO pins the
     * sample-fit path end to end: centroids trained on the half-corpus
@@ -1712,7 +1713,7 @@ object Similarity {
       // (DuckDB re-runs the trained ADC search bit-exactly), while this
       // gate guards RECALL QUALITY — the first call per corpus asserts
       // the epsilon-recall floor against the exact brute-force frame
-      // (the ScaleProbe metric: a returned neighbor counts if its exact
+      // (the ann-benchmarks metric: a returned neighbor counts if its exact
       // cosine is within eps of the query's true 5th-best), failing if
       // the disk index or the ADC path degrades into a faithfully-
       // replayed-but-useless search. Once per corpus per JVM: the gate
@@ -1722,8 +1723,8 @@ object Similarity {
       // Floor 0.3 at eps=0.01: healthy approximate search at the
       // production probes=3-of-10-cells setting measures 0.52–0.88
       // across the synthetic SFs (eps-recall ≈ exact-id recall on
-      // unclustered vectors — near-equivalents are rare, unlike the
-      // planted-cluster 1M ScaleProbe corpus where it hits 0.95);
+      // unclustered vectors — near-equivalents are rare, unlike a
+      // planted-cluster corpus, where it reaches 0.95);
       // plumbing breakage (wrong cells, broken codes, empty slices)
       // drops it to ~0. A tight floor would false-fail the driver gate
       // on driver testdata drift, zeroing the round.
@@ -1933,8 +1934,7 @@ object Similarity {
     * `cells` explicitly to pin the plan fully lazy (the oracle row
     * does, keeping the SQL twin literal). A direction-skewed corpus
     * can still overload one cell (occupancy ~s·N makes that cell's
-    * pairing quadratic in s·N — ScaleProbe's occupancy census pins the
-    * balanced regime); for such corpora swap in trained centroids,
+    * pairing quadratic in s·N); for such corpora swap in trained centroids,
     * which split dense directions where first-k centroids cannot. */
   def semanticDedup(
       embeddings: DataFrame,

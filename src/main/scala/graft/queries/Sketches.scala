@@ -76,9 +76,8 @@ object Sketches {
       .select(explode(gramArray(n)).as("gram"))
 
   /** Build the Count-Min sketch over `docs`' n-gram occurrences and
-    * return the estimator column constructor — exposed so ScaleProbe
-    * can measure the prefilter's map-side discard with the SAME
-    * sketch definition the operator runs (no probe/operator drift). */
+    * return the estimator column constructor [[heavyHitters]] probes
+    * with. */
   private[graft] def cmsEstimator(docs: DataFrame, n: Int,
       depth: Int, width: Int): Column => Column = {
     require(n >= 1, s"n must be >= 1, got $n")

@@ -101,7 +101,8 @@ object SuffixDedup {
     * h = min(14, k), then h doubles (final shift capped at k − h)
     * until h >= k. k <= 14 ⇒ 0 rounds (the pair IS rank_k), k = 20 ⇒ 1
     * (14 → 20), k = 50 ⇒ 2 (14 → 28 → 50). Mirrors the construction
-    * loop's schedule exactly; the ScaleProbe census pins both this
+    * loop's schedule exactly; SuffixDedupSpec ("doubling schedule:
+    * round count matches the plan's lead-windows") pins both this
     * number and the plan's lead-window count to it. */
   def doublingRounds(k: Int): Int = {
     require(k >= 2, s"char-gram length must be >= 2, got $k")
@@ -323,8 +324,8 @@ object SuffixDedup {
     * width, and the DuckDB oracle IS D14b's SQL at every rung,
     * unioned. Hash-green = the exact maximal lengths are consistent
     * with independently computed duplication at every rung (lengths
-    * between rungs are pinned by the brute-force differential in
-    * SuffixDedupSpec and the planted-length ScaleProbe census). */
+    * between rungs are pinned by the brute-force differentials and the
+    * 200-length planted-pair case in SuffixDedupSpec). */
   def dupSpansMaximalLadder(
       docs: DataFrame,
       rungs: Seq[Int] = MaxLadderRungs,

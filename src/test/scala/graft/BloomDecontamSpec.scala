@@ -77,6 +77,22 @@ class BloomDecontamSpec extends SparkSpec {
     assert(rebuilt == exact)
   }
 
+  test("grams colliding under the 1e9+7 poly hash never flag a doc") {
+    // a contamination flag deletes training data, so it must not rest
+    // on a ~30-bit key: the first cut joined poly hashes and flagged
+    // ~1.4k phantom docs at 505k. Train doc 1 and eval doc 101 share
+    // only that key; docs 2 / 102 share a real 8-gram (the control).
+    val k = graft.queries.Contamination.NgramK
+    val (a, b) = PolyHashCollision.grams(spark, k)
+    val shared = (1 to k).map(i => s"shared${('a' + i).toChar}").mkString(" ")
+    val train = Seq((1L, a), (2L, s"lead $shared tail")).toDF("doc_id", "text")
+    val eval = Seq((101L, b), (102L, shared)).toDF("doc_id", "text")
+    val exact = collected(Graft.decontaminate(train, eval))
+    assert(exact.map(r => r._1 -> r._5) == Seq(1L -> 0L, 2L -> 1L), exact)
+    assert(collected(Graft.decontaminateBloom(train, eval)) == exact)
+    assert(collected(Graft.decontaminateBloomBroadcast(train, eval)) == exact)
+  }
+
   test("an empty eval side flags nothing and keeps every train row") {
     val (train, _) = corpus
     val eval = Seq.empty[(Long, String)].toDF("doc_id", "text")

@@ -45,10 +45,18 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("worst-case chain collapses to one component (log-round regime)") {
-    val chain = (0L until 500L).sliding(2).map(s => (s(0), s(1))).toSeq
-    // iterative path: the chain is the round-budget stressor
-    val got = ccMap(chain, localFinish = 0L)
+    import spark.implicits._
+    val n = 500L
+    val chain = (0L until n).sliding(2).map(s => (s(0), s(1))).toSeq
+    // iterative path: the chain is the round-budget stressor — naive
+    // min-label flooding needs n rounds, large/small star O(log n)
+    val (labels, rounds) = ConnectedComponents.connectedComponentsInstrumented(
+      chain.toDF("src", "dst"), localFinishEdges = 0L)
+    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 500 && got.values.forall(_ == 0L))
+    val budget = 2 * (64 - java.lang.Long.numberOfLeadingZeros(n)) + 6
+    assert(rounds >= 1 && rounds <= budget,
+      s"$rounds star rounds on a $n-node chain (budget $budget): not the log regime")
     assert(ccMap(chain) == got, "local finish must agree on the chain")
   }
 

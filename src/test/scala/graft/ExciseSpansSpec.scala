@@ -52,6 +52,21 @@ class ExciseSpansSpec extends SparkSpec {
       (3L, 0L, 0L, "")), out)
   }
 
+  test("grams colliding under the 1e9+7 poly hash are not duplicates") {
+    // a ~30-bit gram key birthday-collides into phantom spans at corpus
+    // scale (677k phantom span rows at 1M docs); the two planted grams
+    // share that key, so only a wider key keeps docs 1 and 2 span-free
+    val (a, b) = PolyHashCollision.grams(spark, 5)
+    val docs = Seq((1L, a), (2L, b), (3L, "p q r s t"), (4L, "p q r s t"))
+      .toDF("doc_id", "text")
+    val spans = Graft.dupSpans(docs, n = 5).collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(spans == Seq((3L, 1L, 5L, 1L), (4L, 1L, 5L, 1L)), spans)
+    val out = rows(Graft.exciseSpans(docs, n = 5))
+    assert(out == Seq((1L, 5L, 0L, a), (2L, 5L, 0L, b),
+      (3L, 5L, 0L, "p q r s t"), (4L, 5L, 5L, "")), out)
+  }
+
   test("exciseSpans degrades a null text to an empty zero-count row") {
     // under legacy sizeOfNull size() returns -1 for null input; the
     // greatest(...) clamp keeps the row at (0, 0, "") either way

@@ -65,10 +65,9 @@ class LpaSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // broadcastLabelsBelow = 0 forces the labels⋈edges shuffle-join
-    // path every round — the plan a >1M-node graph runs (the 1.2M-node
-    // ScaleProbe census runs it at scale; this differential pins that
-    // both paths compute the same fixed point on a structure with real
-    // dynamics: two bridged cliques plus a tie path)
+    // path every round — the plan a >1M-node graph runs; this
+    // differential pins that both paths compute the same fixed point on
+    // a structure with real dynamics: two bridged cliques plus a tie path
     def cliqueEdges(ns: Seq[Long]) =
       for (i <- ns.indices; j <- i + 1 until ns.size) yield (ns(i), ns(j))
     val e = (cliqueEdges(0L to 4L) ++ cliqueEdges(10L to 14L) ++

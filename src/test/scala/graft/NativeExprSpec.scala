@@ -148,6 +148,35 @@ class NativeExprSpec extends SparkSpec {
     assert(diff.count() == 0)
   }
 
+  test("64-permutation MinHash estimates track true Jaccard on low-overlap pairs") {
+    // seeded pairs of one-letter-word docs sharing a 12-word run (true
+    // Jaccard ~0.25). Their 2-shingles poly-hash below P/131, where a
+    // tiny multiplier (a_i = 2i+3) never wraps: (a*h + b) mod P keeps
+    // the hash order, every permutation picks ~the same min, and each
+    // estimate collapses toward 0 or 1. Independent draws keep the mean
+    // error near the binomial sqrt(J(1-J)/64)*0.8 ~ 0.045.
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def word() = ('a' + rnd.nextInt(26)).toChar.toString
+    val pairs = (0 until 100).map { p =>
+      val a = Seq.fill(30)(word())
+      (p, a.mkString(" "), (a.take(12) ++ Seq.fill(18)(word())).mkString(" "))
+    }.toDF("pair", "a", "b")
+    def hs(c: String) = array_distinct(NativeExpressions.shingleHashes(col(c), 2))
+    val rows = pairs.select(
+        NativeExpressions.minhashSigs(hs("a"), 64), NativeExpressions.minhashSigs(hs("b"), 64),
+        size(array_intersect(hs("a"), hs("b"))), size(array_union(hs("a"), hs("b"))))
+      .collect()
+    val (trueJ, err) = rows.map { r =>
+      val agree = r.getSeq[Long](0).zip(r.getSeq[Long](1)).count { case (x, y) => x == y }
+      val j = r.getInt(2).toDouble / r.getInt(3)
+      (j, math.abs(agree / 64.0 - j))
+    }.unzip
+    val (meanJ, meanErr) = (trueJ.sum / trueJ.length, err.sum / err.length)
+    assert(meanJ > 0.1 && meanJ < 0.4, s"pairs must be low-overlap: mean Jaccard $meanJ")
+    assert(meanErr <= 0.07, f"mean |est - true| $meanErr%.4f over 100 pairs (mean J $meanJ%.3f)")
+  }
+
   test("prefix-filtered Jaccard == naive at awkward thresholds (epsilon bound)") {
     // thresholds whose n*t products land on double-representation edges
     // (e.g. 100 * 0.07 = 7.000000000000001): losslessness must survive

@@ -170,10 +170,9 @@ class SuffixDedupSpec extends SparkSpec {
       Set((1L, 1L, 40L), (2L, 3L, 42L)), out.mkString(","))
   }
 
-  test("planted exact-length pairs reconstruct (the ScaleProbe construction, small)") {
+  test("planted exact-length pairs reconstruct (200 planted lengths, 400 pairs)") {
     // pair i shares exactly L = 20 + (i mod 200) chars (md5-block
-    // content), then 'A'/'B' divergence + unique tails — the probe
-    // segment's corpus at 400 pairs
+    // content), then 'A'/'B' divergence + unique tails
     val base = spark.range(400).select(col("id").as("i"),
       (lit(20) + pmod(col("id"), lit(200))).cast("int").as("len"))
     def blocks(salt: String, n: Int) = concat((0 until n).map(t =>
