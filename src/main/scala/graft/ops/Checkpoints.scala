@@ -18,10 +18,13 @@ private[graft] object Checkpoints {
 
   type CkRdd = Option[RDD[_]]
 
-  /** Lazily checkpoint `df`, returning the frame plus the handle needed
-    * to release its blocks once a successor round supersedes it. */
-  def tracked(df: DataFrame): (DataFrame, CkRdd) = {
-    val ck = df.localCheckpoint(false)
+  /** Checkpoint `df`, returning the frame plus the handle needed to
+    * release its blocks once a successor round supersedes it. Lazy by
+    * default; `eager` materializes the blocks now, in one job over
+    * the checkpoint RDD (a `count()` on the returned frame would plan
+    * an aggregation and cost two). */
+  def tracked(df: DataFrame, eager: Boolean = false): (DataFrame, CkRdd) = {
+    val ck = df.localCheckpoint(eager)
     (ck, org.apache.spark.sql.graftbridge.Bridge.checkpointedRdd(ck))
   }
 

@@ -32,6 +32,8 @@ final class PlanCache(capacity: Int) {
     entries.clear()
   }
 
+  private def size: Int = synchronized(entries.size)
+
   /** Staleness note: the memo key is the canonicalized ANALYZED plan,
     * so rewriting the files behind the same path within one session
     * serves the pre-rewrite corpus. Fine for immutable inputs (the
@@ -100,4 +102,11 @@ object PlanCache {
 
   /** Drop (and unpersist) every memo in every [[PlanCache]]. */
   def clearAll(): Unit = instances.forEach(_.clear())
+
+  /** Memos held right now, over every [[PlanCache]]. */
+  private[graft] def held: Int = {
+    var n = 0
+    instances.forEach(pc => n += pc.size)
+    n
+  }
 }

@@ -36,10 +36,35 @@ object ScaleOps {
     * is a placement decision, every consumer here keys its own
     * windows/aggregations. */
   def widenScan(df: DataFrame, key: String): DataFrame = {
+    val n = df.sparkSession.sparkContext.defaultParallelism
+    scanPartitions(df) match {
+      case Some(p) if p < n => df.repartition(n, col(key))
+      case _ => df
+    }
+  }
+
+  /** `df` at the session's parallelism: [[widenScan]] when it arrives
+    * in fewer partitions than `defaultParallelism`, and a shuffle-free
+    * `coalesce` when it arrives in more. A micro-batch source can hand
+    * over one partition per arrival (MemoryStream makes one per
+    * `addData`), and without the coalesce every stage over such a
+    * batch runs one tiny task per arrival. */
+  def fitScan(df: DataFrame, key: String): DataFrame = {
+    val n = df.sparkSession.sparkContext.defaultParallelism
+    scanPartitions(df) match {
+      case Some(p) if p < n => df.repartition(n, col(key))
+      case Some(p) if p > n => df.coalesce(n)
+      case _ => df
+    }
+  }
+
+  /** The partition count `df` would scan in, when that is known
+    * without running anything. */
+  private def scanPartitions(df: DataFrame): Option[Int] =
     // streaming plans cannot be probed (toRdd) or repartitioned here;
     // micro-batches arrive pre-partitioned by the source anyway
-    if (df.isStreaming) return df
-    df.queryExecution.executedPlan match {
+    if (df.isStreaming) None
+    else df.queryExecution.executedPlan match {
       // A plan AQE wrapped contains an exchange (or subquery): its
       // expensive map side already runs at shuffle-partition width, so
       // there is nothing to widen — and probing it would EXECUTE it:
@@ -49,15 +74,9 @@ object ScaleOps {
       // (r15 advisor finding). Exchange-free plans (bare scans,
       // narrow maps, checkpoint-backed frames) are never wrapped, so
       // the probe below stays job-free.
-      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        df
-      case _ =>
-        val n = df.sparkSession.sparkContext.defaultParallelism
-        if (df.queryExecution.toRdd.getNumPartitions < n)
-          df.repartition(n, col(key))
-        else df
+      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => None
+      case _ => Some(df.queryExecution.toRdd.getNumPartitions)
     }
-  }
 
   /** Skew-mitigated equi-join: salt the big side into `buckets`
     * pseudo-keys and replicate the small side once per bucket, so a hot

@@ -313,14 +313,13 @@ object Dedup {
     * registry orientation), `keep` = neither.
     *
     * The incremental shape, not a full-corpus D2 rerun: ONE band join
-    * ([[minhashBandPairs]]) probes with incoming-side band rows only,
-    * against the union's band rows restricted to partners that are
-    * known or earlier, and scores signature agreement on the joined
-    * row (each band row carries its signature) — so the lake is read
-    * once for its band rows, never joined back by doc_id, and never
-    * pairs with itself; nightly cost scales with the batch (x lake
-    * bucket density), not the lake. A per-doc max over the surviving
-    * pairs gives the flags. Doc ids must be disjoint across the two
+    * ([[nearPartners]]) probes with incoming-side band rows only,
+    * against partners that are known or earlier, and scores signature
+    * agreement on the joined row (each band row carries its
+    * signature) — so the lake is read once for its band rows, never
+    * joined back by doc_id, and never pairs with itself; nightly cost
+    * scales with the batch (x lake bucket density), not the lake. A
+    * per-doc max over the surviving pairs gives the flags. Doc ids must be disjoint across the two
     * frames and later batches get larger ids (the D13 ingest
     * contract). In production the lake side's
     * signature/band frames are stored precomputed (the same "store the
@@ -345,18 +344,10 @@ object Dedup {
       if (known.columns.contains("text"))
         minhashSigFrame(known.select(col("doc_id"), col("text")))
       else known
-        .select(col("doc_id") +: (0 until MinhashK).map(i => col(s"s$i")): _*)
-        .filter(col("s0").isNotNull) // shingle-less lake docs carry no signature
-    val sigs = minhashSigFrame(incoming.select(col("doc_id"), col("text")))
-      .withColumn("__known", lit(false))
-      .unionByName(knownSigs.withColumn("__known", lit(true)))
-    // probe with incoming band rows only, against partners that are
-    // known or earlier; a partner sharing several bands rescores to the
-    // same est_jaccard on each, which the max below absorbs
-    val flags = minhashBandPairs(sigs,
-        !col("x.__known") &&
-          (col("y.__known") || col("y.doc_id") < col("x.doc_id")),
-        col("x.doc_id").as("doc_id"), col("y.__known").as("pknown"))
+    // a partner sharing several bands rescores to the same est_jaccard
+    // on each, which the max below absorbs
+    val flags = nearPartners(
+        minhashSigFrame(incoming.select(col("doc_id"), col("text"))), knownSigs)
       .groupBy("doc_id")
       .agg(max(when(col("pknown"), 1).otherwise(0)).as("nk"),
         max(when(!col("pknown"), 1).otherwise(0)).as("nb"))
@@ -502,41 +493,80 @@ object Dedup {
   private[graft] def sigSlotCols(sig: Column): Seq[Column] =
     (0 until MinhashK).map(i => element_at(sig, i + 1).as(s"s$i"))
 
+  /** The named columns `keep` beside the stored s0..s{k-1} signature
+    * of `docs`' text, in one map pass (null for a doc with no
+    * 3-shingle): the one definition of a stored signature row, shared
+    * by [[graft.sources.Sinks.appendBatchSignatures]] and
+    * [[graft.streaming.Streams.ingestFeatures]]. */
+  private[graft] def withSigSlots(docs: DataFrame, keep: Column*): DataFrame = {
+    val hashed = docs.select(keep :+ shingleHashCol(col("text")).as("__hs"): _*)
+    val kept = hashed.columns.toSeq.init.map(col)
+    hashed
+      .select(kept :+ when(size(col("__hs")) > 0, minhashSigCol(col("__hs"))).as("__sig"): _*)
+      .select(kept ++ sigSlotCols(col("__sig")): _*)
+  }
+
   /** The banded-MinHash pair join, rescored on the joined row: each
     * band row carries its doc's whole signature (s0..s{k-1}, plus any
-    * other column of `sigs`), so the self-join on (band_idx, band_hash)
-    * counts agreeing slots in place and never joins back to the
-    * signature frame by doc_id — the [[hammingBandedPairs]] shape.
-    * `pair` is the join residual over the aliases `x`/`y` (a conjunct
-    * on `x` alone is pushed below the join, restricting the probe
-    * side), and `out` picks the output columns beside `est_jaccard`.
-    * Only pairs at est_jaccard >= 0.5 (D2's threshold) survive, once
-    * per band they share: callers dedupe. */
+    * other column of its frame), so the join of `x`'s band rows with
+    * `y`'s on (band_idx, band_hash) counts agreeing slots in place and
+    * never joins back to a signature frame by doc_id — the
+    * [[hammingBandedPairs]] shape. `pair` is the join residual over the
+    * aliases `x`/`y`, and `out` picks the output columns beside
+    * `est_jaccard`. Only pairs at est_jaccard >= 0.5 (D2's threshold)
+    * survive, once per band they share: callers dedupe. */
   private def minhashBandPairs(
-      sigs: DataFrame, pair: Column, out: Column*): DataFrame = {
-    val bands = sigs.select(col("*"),
+      x: DataFrame, y: DataFrame, pair: Column, out: Column*): DataFrame = {
+    def bands(sigs: DataFrame) = sigs.select(col("*"),
       posexplode(array((0 until MinhashBands).map { b =>
         col(s"s${2 * b}") * P + col(s"s${2 * b + 1}")
       }: _*)).as(Seq("band_idx", "band_hash")))
     val agree = (0 until MinhashK)
       .map(i => when(col(s"x.s$i") === col(s"y.s$i"), 1).otherwise(0))
       .reduce(_ + _)
-    bands.as("x").join(bands.as("y"),
+    bands(x).as("x").join(bands(y).as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.band_hash") === col("y.band_hash") && pair)
       .select(out :+ (agree.cast("double") / MinhashK).as("est_jaccard"): _*)
       .filter(col("est_jaccard") >= 0.5)
   }
 
+  /** D13b's near partners from two (doc_id, s0..s{k-1}) signature
+    * frames: one (doc_id, pknown) row per band an incoming doc shares,
+    * at est_jaccard >= 0.5, with a known doc (`pknown`) or with an
+    * EARLIER (smaller doc_id) incoming doc. Rows with a null s0
+    * (shingle-less docs, as a signature lake stores them) never pair.
+    * The one flag definition behind [[dedupIncrementalMinhash]] and
+    * [[graft.streaming.Streams.ingestStreamAppend]]'s decision.
+    *
+    * ONE band join: the incoming band rows probe the union of the
+    * known and the incoming band rows, so the known frame is read once
+    * and never pairs with itself. A filter on `pknown` is pushed into
+    * the union and prunes it to that role's side, and a broadcast hint
+    * on `incoming` survives to the probe side: the known rows then
+    * stream into the band join with no exchange. */
+  private[graft] def nearPartners(incoming: DataFrame, known: DataFrame): DataFrame = {
+    def sigs(df: DataFrame, isKnown: Boolean) = df
+      .select(col("doc_id") +: (0 until MinhashK).map(i => col(s"s$i")): _*)
+      .filter(col("s0").isNotNull)
+      .withColumn("__known", lit(isKnown))
+    val inc = sigs(incoming, isKnown = false)
+    minhashBandPairs(inc, inc.unionByName(sigs(known, isKnown = true)),
+      col("y.__known") || col("y.doc_id") < col("x.doc_id"),
+      col("x.doc_id").as("doc_id"), col("y.__known").as("pknown"))
+  }
+
   /** Public API: MinHash+LSH near-dup pairs over any (doc_id, text)
     * frame. */
-  def minhashPairs(docs: DataFrame): DataFrame =
+  def minhashPairs(docs: DataFrame): DataFrame = {
+    val sigs = minhashSigFrame(docs)
     // est_jaccard is a function of the pair, so the distinct leaves one
     // row per pair however many bands it shares
-    minhashBandPairs(minhashSigFrame(docs), col("x.doc_id") < col("y.doc_id"),
+    minhashBandPairs(sigs, sigs, col("x.doc_id") < col("y.doc_id"),
         col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
       .orderBy("id_a", "id_b")
+  }
 
   val qDedupMinhash: Q = Q(
     "q_dedup_minhash",

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.ops.Jobs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -178,7 +179,7 @@ object KMeansLloyd {
     * doubles (re-keyed dense, correct on any id space — the D15 rank
     * lesson). */
   private def initRows(v: DataFrame, k: Int): Array[(Long, Array[Double])] = {
-    val rows = described(v, "kmeans fit: init") {
+    val rows = Jobs.described(v, "kmeans fit: init") {
       v.select(col("vec_id"), col("embedding"))
         .orderBy(col("vec_id")).limit(k).collect()
     }.sortBy(_.getLong(0))
@@ -207,7 +208,7 @@ object KMeansLloyd {
       v.schema("embedding").dataType.asInstanceOf[ArrayType].elementType == FloatType
     // compiled once: every iteration reruns this RDD, never a new plan
     // (an upstream shuffle runs here, once, and later passes reuse it)
-    val rows = described(v, "kmeans fit: init") {
+    val rows = Jobs.described(v, "kmeans fit: init") {
       v.select(col("vec_id").cast("long"), col("embedding")).queryExecution.toRdd
     }
     val fits = slices.map { s =>
@@ -221,7 +222,7 @@ object KMeansLloyd {
       val bc = v.sparkSession.sparkContext.broadcast(live.map(fits(_).cents))
       val offsets = live.map(slices(_).offset)
       val sums =
-        try described(v, s"kmeans fit: pass ${it + 1}") {
+        try Jobs.described(v, s"kmeans fit: pass ${it + 1}") {
           rows.mapPartitions(part =>
               Iterator.single(accumulate(part, bc.value, offsets, width, isFloat)))
             .reduce { (a, b) => a.indices.foreach(i => a(i) += b(i)); a }
@@ -305,18 +306,6 @@ object KMeansLloyd {
     }
     if (!(d2 * DQ < DomainBound)) throw new IllegalArgumentException(DomainMessage)
     roundHalfUp(d2 * DQ)
-  }
-
-  /** Run `body` with its jobs described as `what` (the Spark UI and
-    * event-log job description; listeners read it from the job
-    * properties, which AQE's stage threads inherit), then restore the
-    * caller's description. */
-  private[queries] def described[A](v: DataFrame, what: String)(body: => A): A = {
-    val sc = v.sparkSession.sparkContext
-    val key = "spark.job.description"
-    val prev = sc.getLocalProperty(key)
-    sc.setLocalProperty(key, what)
-    try body finally sc.setLocalProperty(key, prev)
   }
 
   private def requireWidth(id: Long, n: Int, width: Int): Unit =

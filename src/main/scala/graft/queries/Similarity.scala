@@ -797,7 +797,7 @@ object Similarity {
     * [[buildPqIndex]], [[buildOpqIndex]] and [[appendToPqIndex]]; its
     * jobs carry the description `requireDims: <what>`. */
   private def requireDims(vectors: DataFrame, dims: Int, what: String): Unit = {
-    val span = KMeansLloyd.described(vectors, s"requireDims: $what") {
+    val span = graft.ops.Jobs.described(vectors, s"requireDims: $what") {
       dimSpan(vectors)
     }
     require(span.isDefined, s"$what: embeddings frame is empty")

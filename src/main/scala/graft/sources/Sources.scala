@@ -164,13 +164,7 @@ object Sinks {
   private[graft] def appendBatchSignatures(docs: DataFrame, dir: String): Unit = {
     import graft.queries.Dedup
     val (k1, k2) = Dedup.contentKeyCols(col("text"))
-    docs
-      .select(col("doc_id"), k1.as("k1"), k2.as("k2"),
-        Dedup.shingleHashCol(col("text")).as("__hs"))
-      .select(col("doc_id"), col("k1"), col("k2"),
-        when(size(col("__hs")) > 0, Dedup.minhashSigCol(col("__hs"))).as("__sig"))
-      .select(Seq(col("doc_id"), col("k1"), col("k2")) ++
-        Dedup.sigSlotCols(col("__sig")): _*)
+    Dedup.withSigSlots(docs, col("doc_id"), k1.as("k1"), k2.as("k2"))
       .write.mode(SaveMode.Append).parquet(dir)
   }
 

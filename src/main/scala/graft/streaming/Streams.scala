@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -1067,33 +1067,40 @@ object Streams {
     * survivors) → decontamination (StreamingSpec's multi-batch
     * differential pins exactly that).
     *
-    * One decision per batch: the survivors are materialized once
-    * ([[graft.ops.Checkpoints.tracked]] + a count) BEFORE the append,
-    * and both the append and `each` read that materialization. A
-    * `persist()` cannot hold it: the append is a parquet insert into
+    * One pass over the batch, then one decision, each materialized
+    * once and eagerly ([[graft.ops.Checkpoints.tracked]]):
+    *   - features ([[ingestFeatures]]): the gates, the MinHash
+    *     signature and the contamination flag, computed once per doc
+    *     at the session's parallelism. The eval set's shingles are
+    *     collected once per query ([[contaminatedCol]]).
+    *   - decision ([[appendDecision]]): reads the features, never the
+    *     batch text, and the store through ONE scan.
+    * The append and `each` both read the decision's materialization.
+    * A `persist()` cannot hold it: the append is a parquet insert into
     * `lakeDir`, whose `recacheByPath` clears every cached plan that
-    * reads `lakeDir` — the survivors included, since they read the
-    * lake through `known` — so `each` would rerun the whole gate →
-    * dedup → decontamination plan. The checkpoint's blocks are freed
-    * when the batch's function returns. A block lost before then
-    * fails the batch, and the restarted query replays it, which the
-    * exactly-once note below covers.
+    * reads `lakeDir` — the decision included — so `each` would rerun
+    * it against the grown store. Both materializations are freed when
+    * the batch's function returns, and no memo outlives the batch. A
+    * block lost before then fails the batch, and the restarted query
+    * replays it, which the exactly-once note below covers. The
+    * batch's jobs are described `ingestStreamAppend: features`,
+    * `… decision` and `… append`.
     *
     * Scale shape: the store holds ~150 bytes/doc (D1 keys + MinHash
     * signature — never text), appended as new parquet files per batch
     * as one projection over the survivors (no exchange), and re-read
-    * per batch as a columnar scan of key columns only. The decision's
-    * plan reads the store twice: once for the signatures the band join
-    * probes, once for the id-disjointness guard. Per-batch cost is NOT
-    * yet proportional to the batch: both reads scan the whole store, so
-    * per-batch cost grows with the lake.
+    * per batch as a columnar scan of key columns only. The scan
+    * streams into the band join against the broadcast batch band rows:
+    * no store row is shuffled. Per-batch cost is NOT yet proportional
+    * to the batch: the scan reads the whole store, so per-batch cost
+    * grows with the lake.
     *
     * Exactly-once: on batch replay after a failure the append can
     * double-write a survivor's signature row — duplicate signature
-    * ROWS only repeat band-join matches (same flags — the per-doc max
-    * absorbs repeats), they never change `keep`, so the
-    * store is effectively idempotent for dedup purposes; compact it
-    * periodically ([[graft.sources.Sinks.compactParquet]]). */
+    * ROWS only repeat band-join matches (same flags), they never
+    * change `keep`, so the store is effectively idempotent for dedup
+    * purposes; compact it periodically
+    * ([[graft.sources.Sinks.compactParquet]]). */
   def ingestStreamAppend(
       docs: DataFrame,
       lakeDir: String,
@@ -1101,40 +1108,101 @@ object Streams {
       minWords: Long = 50L,
       stops: Seq[String] = graft.queries.TextAnalysis.GopherStops,
       stagingDir: Option[String] = None)(
-      each: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+      each: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    import graft.ops.{Checkpoints, Jobs}
+    val contaminated = contaminatedCol(evalDocs)
     docs.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // anti-join out the batch's OWN ids: on replay-after-append the
-        // store already holds this batch's survivors, which would (a)
-        // trip D13b's id-disjointness guard and (b) flag every
-        // survivor as a near-dup of itself. Excluding them makes the
-        // replayed batch see exactly the pre-append store.
-        val known = graft.sources.Sinks.readSignatures(spark, lakeDir)
-          .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
-        val (surv, ck) = graft.ops.Checkpoints.tracked(
-          ingestBatch(batch, known, evalDocs, minWords, stops))
+        def phase[A](what: String)(body: => A): A =
+          Jobs.described(batch, s"ingestStreamAppend: $what")(body)
+        val cks = scala.collection.mutable.ArrayBuffer.empty[Checkpoints.CkRdd]
+        def materialized(what: String)(df: => DataFrame): DataFrame = phase(what) {
+          val (m, ck) = Checkpoints.tracked(df, eager = true)
+          cks += ck
+          m
+        }
         try {
-          surv.count() // the decision, computed once, before the append
+          val feats = materialized("features")(
+            ingestFeatures(batch, contaminated, minWords, stops))
+          val surv = materialized("decision")(appendDecision(feats, lakeDir))
           // append FIRST, then hand to the caller: if `each` throws,
           // the batch re-runs and the double-append is harmless (see
           // idempotence note above); the reverse order could emit
           // survivors whose signatures never landed.
-          graft.sources.Sinks.appendBatchSignatures(surv, lakeDir)
-          // staging lake for SCHEDULED COMPACTION
-          // ([[graft.queries.Curation.compactShards]]): survivor DOC
-          // rows (id + text, not just signatures) accumulate here; a
-          // replayed batch double-appends identical rows, which the
-          // compactor's dropDuplicates(doc_id) erases — same
-          // idempotence contract as the signature store.
-          stagingDir.foreach(d => surv
-            .select(col("doc_id"), col("text"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(d))
+          phase("append") {
+            graft.sources.Sinks.appendBatchSignatures(surv, lakeDir)
+            // staging lake for SCHEDULED COMPACTION
+            // ([[graft.queries.Curation.compactShards]]): survivor DOC
+            // rows (id + text, not just signatures) accumulate here; a
+            // replayed batch double-appends identical rows, which the
+            // compactor's dropDuplicates(doc_id) erases — same
+            // idempotence contract as the signature store.
+            stagingDir.foreach(d => surv
+              .select(col("doc_id"), col("text"))
+              .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(d))
+          }
           each(surv)
-        } finally graft.ops.Checkpoints.release(ck)
+        } finally cks.foreach(Checkpoints.release)
       }
       .start()
+  }
+
+  /** Name of [[ingestFeatures]]'s contamination flag column; its
+    * signature columns are s0..s{k-1}, as the signature store names
+    * them. */
+  private val Contaminated = "contaminated"
+
+  /** The per-doc features of one ingest micro-batch, in ONE map pass:
+    * the batch's own columns for the docs that pass [[gopherGates]],
+    * plus the contamination flag (`contaminated`, a
+    * [[contaminatedCol]]) and the MinHash signature as the store's
+    * s0..s{k-1} columns ([[graft.queries.Dedup.withSigSlots]], the row
+    * [[graft.sources.Sinks.appendBatchSignatures]] writes). The pass
+    * runs at the session's parallelism ([[graft.ops.ScaleOps.fitScan]]).
+    * The batch must not already carry columns of those names. */
+  private[graft] def ingestFeatures(
+      batch: DataFrame,
+      contaminated: Column,
+      minWords: Long,
+      stops: Seq[String]): DataFrame =
+    graft.queries.Dedup.withSigSlots(
+      gopherGates(graft.ops.ScaleOps.fitScan(batch, "doc_id"), minWords, stops),
+      batch.columns.toSeq.map(col) :+ contaminated.as(Contaminated): _*)
+
+  /** [[ingestStreamAppend]]'s decision over a batch's materialized
+    * [[ingestFeatures]]: the survivors, with the batch's own columns —
+    * the uncontaminated docs that [[graft.queries.Dedup.nearPartners]]
+    * pairs with no store doc and no earlier batch doc.
+    *
+    * The known side is the store at `lakeDir` minus the batch's OWN
+    * ids: on replay-after-append the store already holds this batch's
+    * survivors, which would flag every survivor as a near-dup of
+    * itself. Excluding them makes the replayed batch see exactly the
+    * pre-append store, and it makes the ids disjoint by construction,
+    * so this decision runs no id guard (the guarded form is
+    * [[graft.queries.Dedup.dedupIncrementalMinhash]]).
+    *
+    * Plan shape: ONE scan of the store, anti-joined against the
+    * broadcast batch ids and streamed into the band join against the
+    * broadcast batch band rows — no store row is shuffled. Each partner
+    * role's paired doc ids broadcast into an anti-join over the
+    * features: one row per (batch doc, partner, shared band), and a
+    * store of dedup survivors holds few partners per doc. */
+  private[graft] def appendDecision(feats: DataFrame, lakeDir: String): DataFrame = {
+    import graft.queries.Dedup
+    val sigCols = (0 until Dedup.MinhashK).map(i => s"s$i")
+    val own = feats.columns.toSeq.filterNot((Contaminated +: sigCols).contains).map(col)
+    val known = graft.sources.Sinks.readSignatures(feats.sparkSession, lakeDir)
+      .join(broadcast(feats.select("doc_id")), Seq("doc_id"), "left_anti")
+    val partners = Dedup.nearPartners(
+      broadcast(feats.select(("doc_id" +: sigCols).map(col): _*)), known)
+    def paired(role: Column) = broadcast(partners.filter(role).select("doc_id"))
+    feats.filter(!col(Contaminated))
+      .join(paired(col("pknown")), Seq("doc_id"), "left_anti")
+      .join(paired(!col("pknown")), Seq("doc_id"), "left_anti")
+      .select(own: _*)
+  }
 
   /** D27's streaming form — ExactSubstr ingest: each arriving
     * micro-batch is REWRITTEN ([[graft.queries.SpanIncremental
@@ -1204,10 +1272,11 @@ object Streams {
 
   /** The C16 ∧ C17 ingest gates as ONE map stage: the retain forms
     * filtered in place, keeping `docs`' own columns — shared by
-    * [[ingestBatch]] and [[ingestStreamKeyed]] so the two cannot
-    * drift. Equal to semi-joining `docs` against both flag frames
-    * whenever `doc_id` is unique within `docs` (the ingest identity
-    * contract), without the three exchanges those joins cost. */
+    * [[ingestBatch]], [[ingestFeatures]] and [[ingestStreamKeyed]] so
+    * the ingest forms cannot drift. Equal to semi-joining `docs`
+    * against both flag frames whenever `doc_id` is unique within
+    * `docs` (the ingest identity contract), without the three
+    * exchanges those joins cost. */
   private def gopherGates(
       docs: DataFrame, minWords: Long, stops: Seq[String]): DataFrame = {
     import graft.queries.TextAnalysis
@@ -1218,6 +1287,29 @@ object Streams {
           .select(own: _*))
       .filter(col("kept") === 1L)
       .select(own: _*)
+  }
+
+  /** D9's contamination flag as a per-row column, shared by
+    * [[ingestStreamAppend]] and [[ingestStreamKeyed]]: a doc is
+    * contaminated iff one of its distinct [[graft.queries.Contamination
+    * .NgramK]]-word shingles is an eval shingle — the rows of
+    * [[graft.queries.Contamination.decontamGate]]. The eval side is
+    * benchmark-sized by definition, so its shingles are collected
+    * here, once (one job), and ship as a typed literal: the
+    * flag is a pure map over the docs (exact string membership, no
+    * hash false positives) that no join or stateful plan has to host. */
+  private[graft] def contaminatedCol(evalDocs: DataFrame): Column = {
+    import graft.queries.Contamination.NgramK
+    import graft.functions.TextFunctions.{shingles, words}
+    import evalDocs.sparkSession.implicits._
+    // deduplicated after the collect: a distinct() would add a shuffle job
+    val evalShingles: Array[String] = evalDocs
+      .select(explode(array_distinct(shingles(words(col("text")), NgramK))).as("s"))
+      .as[String].collect().distinct
+    if (evalShingles.isEmpty) lit(false)
+    else coalesce(arrays_overlap(
+      array_distinct(shingles(words(col("text")), NgramK)),
+      lit(evalShingles)), lit(false))
   }
 
   /** G11's KEYED-STATE form — the whole ingest decision as ONE
@@ -1234,13 +1326,18 @@ object Streams {
     * sets past literal scale, prefilter with the D9d Bloom literal and
     * rescore this way). `keep` = gated ∧ ¬near-seen ∧ ¬contaminated.
     *
-    * vs [[ingestStreamAppend]]: the lake-append form externalizes
-    * cross-batch state to a parquet store (restart-durable, lake-sized,
-    * batch-granular); this form keeps it in the state store —
-    * lower-latency, checkpoint-durable, and the right shape when the
-    * dedup horizon is the STREAM itself rather than a pre-existing
-    * lake. Two chained flatMapGroupsWithState stages, both Append mode
-    * (the supported chaining).
+    * vs [[ingestStreamAppend]]: both forms gate with [[gopherGates]]
+    * and flag contamination with [[contaminatedCol]]. The lake-append
+    * form externalizes cross-batch state to a parquet store
+    * (restart-durable, lake-sized, batch-granular) and pays a few batch
+    * jobs per micro-batch around it: a materialized feature pass (2
+    * jobs when the batch must be widened), a decision that scans the
+    * store once (5) and the append (1). This form keeps the state in
+    * the state store — one streaming plan per micro-batch,
+    * checkpoint-durable, and the right shape when the dedup horizon is
+    * the STREAM itself rather than a pre-existing lake. Two chained
+    * flatMapGroupsWithState stages, both Append mode (the supported
+    * chaining).
     *
     * State bounds: the registry stage holds <= `maxPerBucket` entries
     * of (doc_id, 16-long signature) per ACTIVE (band, band_hash)
@@ -1256,24 +1353,11 @@ object Streams {
       minEstJaccard: Double = 0.5,
       maxPerBucket: Int = 1024): Dataset[IngestDecision] = {
     import docs.sparkSession.implicits._
-    import graft.queries.{Contamination, Dedup}
-    import graft.functions.TextFunctions.{shingles, words}
+    import graft.queries.Dedup
     val gated =
       gopherGates(docs.select(col("doc_id"), col("text")), minWords, stops)
-    // eval side is benchmark-sized by definition — its distinct shingle
-    // set ships as a typed literal, making the contamination flag a
-    // pure map stage (exact string membership, no hash FPs)
-    val evalShingles: Array[String] = evalDocs
-      .select(explode(array_distinct(
-        shingles(words(col("text")), Contamination.NgramK))).as("s"))
-      .distinct().as[String].collect()
-    val contaminatedCol =
-      if (evalShingles.isEmpty) lit(false)
-      else coalesce(arrays_overlap(
-        array_distinct(shingles(words(col("text")), Contamination.NgramK)),
-        lit(evalShingles)), lit(false))
     val flagged = gated
-      .withColumn("contaminated", contaminatedCol)
+      .withColumn("contaminated", contaminatedCol(evalDocs))
       .withColumn("hs", Dedup.shingleHashCol(col("text")))
     val banded = flagged.filter(size(col("hs")) > 0)
       .withColumn("sig", Dedup.minhashSigCol(col("hs")))

@@ -283,4 +283,21 @@ class GraftFacadeSpec extends SparkSpec {
       .count() > 0L)
     graft.ops.Release.sweep(spark)
   }
+
+  test("corpusMapModel / corpusMapAssign equal CorpusMap.fitModel / assignFrozen") {
+    import graft.queries.CorpusMap
+    val corpus = Tables.documents(spark, sfDir)
+    // non-default arguments, so a dropped or swapped parameter shows
+    val model = Graft.corpusMapModel(corpus, dims = 16, cells = 4, iters = 2,
+      fitFraction = 0.5)
+    val want = CorpusMap.fitModel(corpus, 16, 4, 2, 0.5)
+    def plain(m: CorpusMap.CorpusMapModel) =
+      (m.centroids.map { case (c, v) => (c, v.toSeq) }, m.cuts, m.dims)
+    assert(plain(model) == plain(want))
+    assert(model.dims == 16 && model.centroids.size == 4)
+    val got = Graft.corpusMapAssign(corpus, model).collect().map(_.toSeq).toSet
+    assert(got.nonEmpty &&
+      got == CorpusMap.assignFrozen(corpus, want).collect().map(_.toSeq).toSet)
+    graft.ops.Release.sweep(spark)
+  }
 }

@@ -158,6 +158,72 @@ class PlanShapeSpec extends SparkSpec {
     graft.ops.Release.sweep(spark)
   }
 
+  test("an append micro-batch decision reads the lake once, unshuffled, from the features") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.streaming.Streams
+    graft.ops.Release.sweep(spark)
+    val stops = Seq("the", "a", "of", "and", "to", "in", "is")
+    def good(t: String) = Seq(
+      s"the cat ${t}aa big house", s"and dog ${t}bb warm garden",
+      s"of bird ${t}cc tall market", s"to fish ${t}dd wide basket",
+      s"a goat ${t}ee ripe apple", s"in lamb ${t}ff sweet pear",
+      s"is wolf ${t}gg fresh plum").mkString(" ")
+    val lakeDir = java.nio.file.Files.createTempDirectory("graft-plan-lake1")
+      .resolve("sigs").toString
+    graft.sources.Sinks.appendSignatures(
+      Seq((100L, good("lke"))).toDF("doc_id", "text"), lakeDir)
+    val batch = Seq((1L, good("one")), (2L, good("lke")), (3L, "tiny doc"))
+      .toDF("doc_id", "text")
+    val eval = Seq((200L, good("evl"))).toDF("doc_id", "text")
+    // the decision exactly as ingestStreamAppend runs it: over the
+    // materialized features
+    val (feats, ck) = graft.ops.Checkpoints.tracked(
+      Streams.ingestFeatures(batch, Streams.contaminatedCol(eval), 10L, stops),
+      eager = true)
+    try {
+      val decision = Streams.appendDecision(feats, lakeDir)
+      assert(decision.collect().map(_.getLong(0)).toSeq == Seq(1L))
+      val plan = decision.queryExecution.executedPlan
+      def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case o => o.children
+      }
+      def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
+      val lakeName = new java.io.File(lakeDir).getName
+      def isLake(p: SparkPlan) = p match {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == lakeName)
+        case _ => false
+      }
+      // every root-to-scan path of the executed plan, stage boundaries included
+      def paths(p: SparkPlan): Seq[List[SparkPlan]] =
+        if (isLake(p)) Seq(List(p)) else kids(p).flatMap(paths).map(p :: _)
+      val lakePaths = paths(plan)
+      assert(lakePaths.size == 1,
+        s"${lakePaths.size} lake scans in one decision:\n${plan.toString.take(4000)}")
+      def isBandJoin(p: SparkPlan) = p match {
+        case j: BaseJoinExec =>
+          (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "band_hash"))
+        case _ => false
+      }
+      val fromJoin = lakePaths.head.dropWhile(!isBandJoin(_))
+      assert(fromJoin.nonEmpty, s"the lake feeds no band join:\n${plan.toString.take(4000)}")
+      val moved = fromJoin.filter(n => n.isInstanceOf[Exchange] || n.isInstanceOf[QueryStageExec])
+      assert(moved.isEmpty,
+        s"lake rows cross ${moved.map(_.nodeName)} before the band join:\n${plan.toString.take(4000)}")
+      // the gates ran in the feature pass: no filter here reads the text
+      val textFilters = all(plan).collect {
+        case f: FilterExec if f.condition.references.exists(_.name == "text") => f
+      }
+      assert(textFilters.isEmpty, s"the decision re-evaluates a gate: $textFilters")
+    } finally graft.ops.Checkpoints.release(ck)
+    graft.ops.Release.sweep(spark)
+  }
+
   test("q_dedup_minhash rescores on the band join: no join keyed on doc_id") {
     graft.ops.Release.sweep(spark)
     val sp = SparkEntry.queries("q_dedup_minhash")(spark, sfDir).queryExecution.sparkPlan

@@ -1121,6 +1121,156 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** A 35-word doc that passes both gates at minWords = 10, all tokens
+    * distinct, with the letter tag `t` every 5 positions: docs with
+    * different tags share no shingles beyond the template slots. */
+  private def tagged(t: String) = Seq(
+    s"the cat ${t}aa big house", s"and dog ${t}bb warm garden",
+    s"of bird ${t}cc tall market", s"to fish ${t}dd wide basket",
+    s"a goat ${t}ee ripe apple", s"in lamb ${t}ff sweet pear",
+    s"is wolf ${t}gg fresh plum").mkString(" ")
+  private val tagStops = Seq("the", "a", "of", "and", "to", "in", "is")
+
+  /** A signature lake holding one doc (id 100, tag "lke") under a fresh
+    * temp directory. */
+  private def oneDocLake(): String = {
+    import spark.implicits._
+    val lakeDir = java.nio.file.Files.createTempDirectory("graft-lake-batch")
+      .resolve("sigs").toString
+    graft.sources.Sinks.appendSignatures(
+      Seq((100L, tagged("lke"))).toDF("doc_id", "text"), lakeDir)
+    lakeDir
+  }
+
+  test("ingestStreamAppend: a batch leaves nothing persisted") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val lakeDir = oneDocLake()
+    val eval = Seq((200L, tagged("evl"))).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    graft.ops.Release.sweep(spark)
+    val mem = MemoryStream[StreamingSpec.Doc]
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val query = Streams.ingestStreamAppend(mem.toDF(), lakeDir, eval,
+      minWords = 10L, stops = tagStops) { surv =>
+      got ++= surv.select("doc_id").collect().map(_.getLong(0))
+    }
+    try {
+      val (rddsBefore, memosBefore) = (sc.getPersistentRDDs.keySet, graft.ops.PlanCache.held)
+      mem.addData(
+        StreamingSpec.Doc(1L, tagged("one")),   // survives
+        StreamingSpec.Doc(2L, tagged("lke")),   // near-dup of the lake doc
+        StreamingSpec.Doc(3L, "tiny doc"))      // fails the gates
+      query.processAllAvailable()
+      assert(got.toSeq == Seq(1L), got)
+      assert(sc.getPersistentRDDs.keySet == rddsBefore,
+        s"persisted RDDs ${sc.getPersistentRDDs.keySet.diff(rddsBefore)} outlive the batch")
+      assert(graft.ops.PlanCache.held == memosBefore,
+        s"${graft.ops.PlanCache.held - memosBefore} plan memos outlive the batch")
+    } finally query.stop()
+  }
+
+  test("ingestStreamAppend: a batch of many small arrivals runs at the session's parallelism") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    implicit val sq = spark.sqlContext
+    val lakeDir = oneDocLake()
+    val eval = Seq((200L, tagged("evl"))).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    // 40 addData calls before the query starts: one batch of 40
+    // one-doc input partitions
+    def tag(i: Int) = s"${('a' + i % 26).toChar}${('a' + i / 26).toChar}q"
+    val docs = (1 to 40).map(i => StreamingSpec.Doc(i.toLong, tagged(tag(i))))
+    // the batch twin, against the lake as it is before the stream
+    val want = Streams.ingestBatch(docs.toDF(),
+        graft.sources.Sinks.readSignatures(spark, lakeDir), eval, 10L, tagStops)
+      .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+    graft.ops.Release.sweep(spark)
+    val mem = MemoryStream[StreamingSpec.Doc]
+    docs.foreach(d => mem.addData(d))
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        widths.add(e.stageInfo.numTasks)
+    }
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val query = Streams.ingestStreamAppend(mem.toDF(), lakeDir, eval,
+      minWords = 10L, stops = tagStops) { surv =>
+      got ++= surv.select("doc_id").collect().map(_.getLong(0))
+    }
+    sc.addSparkListener(listener)
+    try {
+      query.processAllAvailable()
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      assert(got.sorted.toSeq == want && want.size > 30, s"stream $got vs batch $want")
+      val ws = widths.toArray(Array.empty[Integer]).toSeq.map(_.intValue)
+      assert(ws.nonEmpty && ws.max <= sc.defaultParallelism,
+        s"stage widths $ws over ${sc.defaultParallelism} cores")
+    } finally {
+      query.stop()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("ingestStreamAppend: the batch's jobs carry per-phase descriptions, and `each` the batch's own") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    implicit val sq = spark.sqlContext
+    val lakeDir = oneDocLake()
+    val eval = Seq((200L, tagged("evl"))).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descs.add)
+    }
+    var eachDesc: String = null
+    val mem = MemoryStream[StreamingSpec.Doc]
+    val query = Streams.ingestStreamAppend(mem.toDF(), lakeDir, eval,
+      minWords = 10L, stops = tagStops) { _ =>
+      eachDesc = sc.getLocalProperty("spark.job.description")
+    }
+    sc.addSparkListener(listener)
+    try {
+      mem.addData(StreamingSpec.Doc(1L, tagged("one")), StreamingSpec.Doc(2L, tagged("lke")))
+      query.processAllAvailable()
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      val phases = descs.toArray(Array.empty[String]).toSeq
+        .filter(_.startsWith("ingestStreamAppend: "))
+      info(phases.groupBy(identity).map { case (d, n) => s"$d: ${n.size} jobs" }
+        .toSeq.sorted.mkString(", "))
+      assert(phases.toSet == Set("features", "decision", "append")
+        .map(p => s"ingestStreamAppend: $p"), phases)
+      // restored: `each` runs under the streaming batch's description
+      assert(eachDesc != null && eachDesc.contains(s"id = ${query.id}") &&
+        eachDesc.contains("batch = 0"), eachDesc)
+    } finally {
+      query.stop()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("ingestStream: a batch id that is also a known id fails the disjointness guard") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val known = Seq((2L, tagged("lke"))).toDF("doc_id", "text")
+    val eval = Seq((200L, tagged("evl"))).toDF("doc_id", "text")
+    val mem = MemoryStream[StreamingSpec.Doc]
+    val query = Streams.ingestStream(mem.toDF(), known, eval,
+      minWords = 10L, stops = tagStops) { surv => surv.collect(); () }
+    try {
+      // doc 2 passes the gates with new content under the lake's id
+      mem.addData(StreamingSpec.Doc(1L, tagged("one")), StreamingSpec.Doc(2L, tagged("two")))
+      val e = intercept[Exception](query.processAllAvailable())
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(_.contains("must be disjoint")), e)
+    } finally query.stop()
+    graft.ops.Release.sweep(spark)
+  }
+
   test("stream -> staging lake -> compactShards equals batch produceShards end to end") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
